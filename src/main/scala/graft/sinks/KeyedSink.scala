@@ -2,10 +2,15 @@ package graft.sinks
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Idempotent keyed upsert sink — the engine's replacement for the reference's
@@ -46,11 +51,16 @@ import org.apache.spark.sql.functions._
  * order: incoming rows carry a monotonically-increasing sequence number and
  * the LAST occurrence of a key wins (the ES sink's last-write-wins order).
  *
- * Scale design: an upsert merges ONLY the buckets the incoming batch touches
- * (read touched buckets + union + window-dedup = one shuffle on the key). A
- * micro-batch touching k buckets rewrites k/numBuckets of the state, never
- * the whole table — the same pattern scales to a 1000-executor cluster by
- * raising numBuckets.
+ * Scale design: an upsert merges ONLY the buckets the incoming batch touches,
+ * so a micro-batch touching k buckets rewrites k/numBuckets of the state,
+ * never the whole table — the same pattern scales to a 1000-executor cluster
+ * by raising numBuckets. Its job cost is fixed, not per bucket: the tagged
+ * input is persisted, so the caller's plan is evaluated once; the touched
+ * buckets come from one shuffle-free job over that cache; their version dirs
+ * are listed and their schema read in-process, with no Spark job; and the
+ * merge, window dedup and write share ONE hash exchange on the bucket id,
+ * into at most `defaultParallelism` write tasks that still write one file
+ * per bucket.
  */
 final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
     retainManifests: Int = 2) {
@@ -108,6 +118,77 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
   private def bucketDataDir(b: Long, version: String) =
     new Path(s"$path/buckets/__bucket=$b/$version")
 
+  /** Merges `incoming` with the committed rows of the buckets it touches and
+    * moves each merged bucket to `buckets/__bucket=<b>/<version>`, where no
+    * manifest references it yet. Returns the touched and the staged buckets. */
+  private def stage(incoming: DataFrame, versions: Map[Long, String], version: String,
+      hfs: FileSystem): (Seq[Long], Seq[Long]) = {
+    val spark = incoming.sparkSession
+    // One job, no shuffle: a bucket set per partition, combined by fold — a
+    // zero-partition batch folds to the empty set, where reduce would throw.
+    val touched = incoming.select("__bucket").rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getLong(0)).toSet))
+      .fold(Set.empty[Long])(_ ++ _).toSeq.sorted
+    if (touched.isEmpty) return (Nil, Nil)
+
+    val existingDirs = touched.flatMap(b => versions.get(b).map(bucketDataDir(b, _)))
+      .filter(hfs.exists)
+    val merged =
+      if (existingDirs.isEmpty) incoming
+      else readVersionDirs(spark, hfs, existingDirs)
+        .withColumn("__bucket", bucketOf(col(keyCol)))
+        .withColumn("__w", lit(0))
+        .withColumn("__seq", lit(-1L))
+        .unionByName(incoming)
+
+    val staging = new Path(s"$path/_staging_$version")
+    // One hash exchange on the bucket id serves both the window and the
+    // write: a partitioning on __bucket already clusters (__bucket, key), so
+    // the window adds no shuffle of its own. Every bucket lands in one task,
+    // and so in one file, while the task count stays within the cores
+    // (min(touched, defaultParallelism)) instead of one task per bucket. For
+    // buckets that outgrow a single task, raise numBuckets (the unit of file
+    // granularity).
+    val w = Window.partitionBy(col("__bucket"), col(keyCol))
+      .orderBy(col("__w").desc, col("__seq").desc)
+    merged
+      .repartition(math.min(touched.size, spark.sparkContext.defaultParallelism), col("__bucket"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn", "__w", "__seq")
+      .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
+    val stagedBuckets = touched.filter(b => hfs.exists(new Path(staging, s"__bucket=$b")))
+    stagedBuckets.foreach { b =>
+      val dst = bucketDataDir(b, version)
+      hfs.mkdirs(dst.getParent)
+      hfs.rename(new Path(staging, s"__bucket=$b"), dst)
+    }
+    hfs.delete(staging, true)
+    (touched, stagedBuckets)
+  }
+
+  /** The committed rows of `dirs`, read in groups no larger than the
+    * session's parallel-listing threshold so every group is listed serially
+    * in-process instead of by a listing job, and with the schema of one
+    * file's footer so no schema-inference job runs. That is the schema
+    * inference would pick, so `unionByName` rejects a drifted batch as before. */
+  private def readVersionDirs(spark: SparkSession, hfs: FileSystem, dirs: Seq[Path]): DataFrame = {
+    val groupSize = math.max(1,
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    val schema = footerSchema(hfs, dirs.head)
+    dirs.grouped(groupSize)
+      .map(g => spark.read.schema(schema).parquet(g.map(_.toString): _*))
+      .reduce(_ union _)
+  }
+
+  /** The row schema Spark recorded in the footer of version dir `dir`'s file. */
+  private def footerSchema(hfs: FileSystem, dir: Path): StructType = {
+    val file = hfs.listStatus(dir).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hfs.getConf))
+    val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData finally reader.close()
+    DataType.fromJson(meta.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+  }
+
   /** Upsert a (batch) DataFrame: incoming rows win over existing rows on keyCol;
     * within the batch the last occurrence of a key (arrival order) wins. */
   def upsert(batch: DataFrame, epochId: Long): Unit = {
@@ -138,52 +219,20 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
 
     // __w: incoming beats existing; __seq: deterministic intra-batch
     // last-write-wins (ADVICE round 1) — existing rows get __seq = -1.
+    // Persisted below so the caller's plan (scan, decode, enrich) runs once,
+    // and __seq is drawn once, for both the touched-bucket job and the write.
     val incoming = batch
       .withColumn("__bucket", bucketOf(col(keyCol)))
       .withColumn("__w", lit(1))
       .withColumn("__seq", monotonically_increasing_id())
-    val touched = incoming.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).sorted // small: ≤ numBuckets values
-
     val versions = currentVersions(spark)
-    val existingDirs = touched.flatMap(b => versions.get(b).map(v => b -> bucketDataDir(b, v)))
-      .filter { case (_, d) => hfs.exists(d) }
-    val merged =
-      if (existingDirs.isEmpty) incoming
-      else {
-        val existing = spark.read
-          .parquet(existingDirs.map(_._2.toString): _*)
-          .withColumn("__bucket", bucketOf(col(keyCol)))
-          .withColumn("__w", lit(0))
-          .withColumn("__seq", lit(-1L))
-        existing.unionByName(incoming)
-      }
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("__w").desc, col("__seq").desc)
-    val deduped = merged
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__w", "__seq")
+    val version = s"v${epochId}_${UUID.randomUUID().toString.take(8)}"
 
     // 1. Stage the merged buckets (data dirs are invisible until the manifest
     //    commit below; a crash here leaves only ignorable orphans).
-    val version = s"v${epochId}_${UUID.randomUUID().toString.take(8)}"
-    val staging = new Path(s"$path/_staging_$version")
-    // One task (=> one file) per touched bucket: without the repartition the
-    // partitionBy write fans every shuffle partition across every bucket dir,
-    // producing numPartitions small files per bucket per epoch. Hash
-    // repartitioning on the bucket id keeps file counts O(1) per bucket; for
-    // buckets that outgrow a single task, raise numBuckets (the unit of both
-    // parallelism and file granularity).
-    deduped
-      .repartition(math.max(touched.length, 1), col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
-    val stagedBuckets = touched.filter(b => hfs.exists(new Path(staging, s"__bucket=$b")))
-    stagedBuckets.foreach { b =>
-      val dst = bucketDataDir(b, version)
-      hfs.mkdirs(dst.getParent)
-      hfs.rename(new Path(staging, s"__bucket=$b"), dst)
-    }
-    hfs.delete(staging, true)
+    incoming.persist(StorageLevel.MEMORY_AND_DISK)
+    val (touched, stagedBuckets) =
+      try stage(incoming, versions, version, hfs) finally incoming.unpersist()
 
     beforeCommitHook() // crash window: staged data visible, nothing committed
 

@@ -99,11 +99,14 @@ class StreamingSpec extends SparkSpec {
     try {
       input.addData("a" -> 1, "b" -> 2)
       q.processAllAvailable()
-      input.addData("b" -> 20, "c" -> 30)
+      input.addData("b" -> 20, "c" -> 30, "d" -> 40)
       q.processAllAvailable()
     } finally q.stop()
     val state = sink.read(s).get.collect()
       .map(r => r.getAs[String]("data_key") -> r.getAs[Int]("v")).toMap
-    assert(state === Map("a" -> 1, "b" -> 20, "c" -> 30))
+    assert(state === Map("a" -> 1, "b" -> 20, "c" -> 30, "d" -> 40))
+    // the progress counts every scan of a batch: the upsert must scan it once
+    val inputRows = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+    assert(inputRows === Seq(2L, 3L))
   }
 }
