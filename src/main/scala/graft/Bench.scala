@@ -44,22 +44,26 @@ import org.apache.spark.sql.SparkSession
   * masquerade as a speedup by failing fast on its re-runs.
   */
 object Bench {
+  /** Between-query block hygiene (round 11): the committed round-10 bench
+    * carried a consecutive ten-query block at 5–36× its isolated re-run —
+    * the single-JVM run never unpersisted, so hundreds of queries'
+    * localCheckpoint blocks piled up in the block manager and a mid-run
+    * stretch paid for it. Sweeps cached plans and unprotected persisted
+    * RDDs; the FrameMemo index frames are exempt (unpersisting a
+    * localCheckpoint truncates lineage — eviction there would BREAK later
+    * readers, not merely slow them). Run after every query. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    val prot = graft.ops.FrameMemo.protectedIds
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!prot.contains(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate clones the generator's input expression into
-      // an inferred size()>0 filter; when that input is expensive (from_json
-      // of a nested array) the clone re-parses every row a second time in a
-      // separate operator where codegen CSE can't reach (q04: 5.5s -> 1.5s).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // local iteration only (driver sets no env): comma-separated names
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
@@ -85,21 +89,6 @@ object Bench {
       val t0 = System.nanoTime()
       spark.range(200000000L).selectExpr("sum(id)").collect()
       (System.nanoTime() - t0) / 1e9
-    }
-    // Between-query block hygiene (round 11): the committed round-10 bench
-    // carried a consecutive ten-query block at 5–36× its isolated re-run —
-    // the single-JVM run never unpersisted, so hundreds of queries'
-    // localCheckpoint blocks piled up in the block manager and a mid-run
-    // stretch paid for it. Sweep cached plans and unprotected persisted
-    // RDDs after every query; the FrameMemo index frames are exempt
-    // (unpersisting a localCheckpoint truncates lineage — eviction there
-    // would BREAK later readers, not merely slow them).
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      val prot = graft.ops.FrameMemo.protectedIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!prot.contains(id)) rdd.unpersist(blocking = false)
-      }
     }
     // Second-chance pass (round 11, hardened round 12): any query whose
     // min-of-3 lands >3× its baseline gets a fresh re-run block at the
@@ -149,7 +138,7 @@ object Bench {
       // min-of-3 for every query: the summed noise of single samples across
       // hundreds of fast queries is what destabilized the round-9 totals
       val runs = Seq.fill(3)(timed(fn))
-      sweep()
+      sweep(spark)
       name -> runs
     }
     def minOf(runs: Seq[(Double, Boolean)]): Option[Double] = {
@@ -165,7 +154,7 @@ object Bench {
         progress(s"recheck $name")
         rechecked += name
         val rerun = Seq.fill(3)(timed(queries.toMap.apply(name)))
-        sweep()
+        sweep(spark)
         name -> (runs ++ rerun)
       }
     }

@@ -111,7 +111,6 @@ object Curation {
       minAvgTokLen: Double = 3.0, maxAvgTokLen: Double = 8.0,
       minStopwords: Long = 2L, maxRepRatio: Double = 0.2): DataFrame = {
     import graft.dedup.Dedup
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val toks = TextOps.tokens(col(textCol))
     docs
       .select(col(idCol),
@@ -929,7 +928,6 @@ object Curation {
   def corpusReport(docs: DataFrame, idCol: String, textCol: String,
       domainCol: String, langCol: String): DataFrame = {
     import graft.text.TextOps
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val toks = TextOps.tokens(col(textCol))
     val gate = ruleGate(docs, idCol, textCol).select(col("pass"))
     val main = docs.select(

@@ -45,10 +45,7 @@ object Dedup {
 
   /** Word n-gram shingles (distinct) of a token array — the native
     * [[graft.functions.WordShingles]] kernel (one codegen'd static call per
-    * row). PRECONDITION: the session must have run
-    * [[graft.functions.GraftFunctions.ensureRegistered]] (every in-repo
-    * entry point — [[shingled]], the catalog queries — does).
-    * [[shinglesHof]] is the built-in composition it is law-tested
+    * row). [[shinglesHof]] is the built-in composition it is law-tested
     * against. */
   def shingles(toks: Column, n: Int): Column = GraftFunctions.wordShingles(toks, n)
 
@@ -89,7 +86,6 @@ object Dedup {
 
   private def shingledBase(docs: DataFrame, idCol: String, textCol: String, n: Int,
       shingleFn: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // .rdd materializes a physical plan just to read the partition count and
     // THROWS on streaming frames — skip the spread gate for streams (a
@@ -156,7 +152,6 @@ object Dedup {
    */
   def sourceOverlap(docs: DataFrame, textCol: String,
       domainCol: String, n: Int = 3): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val h = docs
       .select(col(domainCol).as("source"), TextOps.tokens(col(textCol)).as("w"))
       .filter(size(col("w")) >= n)
@@ -588,7 +583,6 @@ object Dedup {
    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.6, bands: Int = 42, rows: Int = 3): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val t = shingled(docs, idCol, textCol, n)
     val sigs = t.withColumn("sig", GraftFunctions.minhashSig(col("s"), bands * rows))
     val banded = sigs.select(
@@ -620,7 +614,6 @@ object Dedup {
    */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val chunks = maxHamming + 1
     val bitsPer = 64 / chunks
     val f = docs.select(
@@ -878,7 +871,6 @@ object Dedup {
     * in tests and small-corpus audits, never in a 100 TB pipeline. */
   def embeddingNearDupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
       .repartition(embeddings.sparkSession.sparkContext.defaultParallelism)
     val a = e.alias("a"); val b = e.alias("b")
@@ -914,7 +906,6 @@ object Dedup {
    */
   def embeddingNearDupPairsLsh(embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 16, maxHamming: Int = 3): DataFrame = {
-    GraftFunctions.ensureRegistered(embeddings.sparkSession)
     val (chunks, bitsPer) = chunkGeometry(planes, maxHamming)
     val e = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"))
     val keyed = chunkKeyed(e, planes, chunks, bitsPer)
@@ -970,7 +961,6 @@ object Dedup {
   def embeddingCrossPairsLsh(left: DataFrame, right: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       planes: Int = 16, maxHamming: Int = 3): DataFrame = {
-    GraftFunctions.ensureRegistered(left.sparkSession)
     val (chunks, bitsPer) = chunkGeometry(planes, maxHamming)
     val l = left.select(col(idCol).as("id"), col(vecCol).as("v"))
     val r = right.select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -1031,7 +1021,6 @@ object Dedup {
    */
   def semDedup(embeddings: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, tau: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(embeddings.sparkSession)
     val cents = graft.sim.Similarity.kmeansCentroids(embeddings, idCol, vecCol, k, iters)
     // one materialized assignment: the self-join below references cells on
     // BOTH sides (plus the output base) — without the cut each reference
@@ -1121,7 +1110,6 @@ object Dedup {
     require(prefixLen >= 2 && thresholdNum >= 0 && thresholdDen > 0 && salts >= 1,
       s"need prefixLen >= 2, a valid threshold and salts >= 1, " +
         s"got $prefixLen, $thresholdNum/$thresholdDen, $salts")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val t = docs
       .select(col(idCol).as("id"), col(blockCol).as("blk"),
         substring(col(textCol), 1, prefixLen).as("s"))

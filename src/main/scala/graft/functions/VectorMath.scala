@@ -90,13 +90,15 @@ object VectorMath {
     * `aggregate(zip_with(a, b, (x, y) -> x*y), 0.0d, (acc, t) -> acc + t)`
     * (same multiplies, same adds, same order; round 16 — the array<double>
     * twin of [[dotF]] for the PCA / silhouette / geo-median family, whose
-    * folds are the oracle's accumulation contract). */
-  def dotD(a: ArrayData, b: ArrayData): Double = {
+    * folds are the oracle's accumulation contract). A null element makes the
+    * result null, exactly like the fold's `acc + null`. */
+  def dotD(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     require(b.numElements() == n, s"vector length mismatch: $n vs ${b.numElements()}")
     var dot = 0.0
     var i = 0
     while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
       dot += a.getDouble(i) * b.getDouble(i)
       i += 1
     }
@@ -109,14 +111,16 @@ object VectorMath {
     * `aggregate(zip_with(zip_with(q, m, (q,m) -> cast(q-m as double)), v,
     * (x,y) -> x*y), 0.0d, (acc,t) -> acc+t)` (long subtraction is exact,
     * long→double cast exact for |q−m| < 2⁵³). The per-row scoring kernel of
-    * the PCA outlier projection (q98). */
-  def centerDotL(q: ArrayData, m: ArrayData, v: ArrayData): Double = {
+    * the PCA outlier projection (q98). A null element makes the result
+    * null, like [[dotD]]. */
+  def centerDotL(q: ArrayData, m: ArrayData, v: ArrayData): java.lang.Double = {
     val n = q.numElements()
     require(m.numElements() == n && v.numElements() == n,
       s"vector length mismatch: $n vs ${m.numElements()} vs ${v.numElements()}")
     var dot = 0.0
     var i = 0
     while (i < n) {
+      if (q.isNullAt(i) || m.isNullAt(i) || v.isNullAt(i)) return null
       dot += (q.getLong(i) - m.getLong(i)).toDouble * v.getDouble(i)
       i += 1
     }
@@ -170,9 +174,12 @@ object VectorMath {
     * [[subL2F]] over subspace `s`, ties to the SMALLER position — exactly
     * `element_at(array_sort(transform(sequence(1, |cb|), j ->
     * struct(subDist(...) as d, j))), 1)("j")`: array_sort orders by (d, j)
-    * ascending, so the strict `<` update keeps the earliest minimum. */
+    * ascending, so the strict `<` update keeps the earliest minimum. An
+    * empty codebook has no position to return and fails, as the HOF's
+    * `element_at(..., 1)` does. */
   def pqArgmin(x: ArrayData, cb: ArrayData, s: Int, subDim: Int): Int = {
     val ncb = cb.numElements()
+    require(ncb > 0, "graft_pq_argmin: empty codebook")
     var best = Double.PositiveInfinity
     var bestJ = 1
     var j = 0

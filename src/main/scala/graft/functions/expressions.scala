@@ -71,11 +71,13 @@ case class DotProductD(left: Expression, right: Expression)
       s"$prettyName requires (array<double>, array<double>), got " +
         children.map(_.dataType.simpleString).mkString(", "))
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_dot_d"
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorMath.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorMath.dotD($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      BoxedDouble.assign(ctx, ev, s"graft.functions.VectorMath.dotD($a, $b)"))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductD =
     copy(left = l, right = r)
 }
@@ -94,12 +96,14 @@ case class CenterDotL(first: Expression, second: Expression, third: Expression)
           children.map(_.dataType.simpleString).mkString(", "))
     }
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_center_dot_l"
   override protected def nullSafeEval(q: Any, m: Any, v: Any): Any =
     VectorMath.centerDotL(q.asInstanceOf[ArrayData], m.asInstanceOf[ArrayData],
       v.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (q, m, v) => s"graft.functions.VectorMath.centerDotL($q, $m, $v)")
+    nullSafeCodeGen(ctx, ev, (q, m, v) => BoxedDouble.assign(ctx, ev,
+      s"graft.functions.VectorMath.centerDotL($q, $m, $v)"))
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): CenterDotL =
     copy(first = f, second = s, third = t)
 }
@@ -133,20 +137,24 @@ case class OrderedStructSum(child: Expression)
   private lazy val vIsInt = valueType.contains(IntegerType)
   override protected def nullSafeEval(arr: Any): Any =
     VectorMath.orderedStructSum(arr.asInstanceOf[ArrayData], vIsLong, vIsInt)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, a => {
-      val boxed = ctx.freshName("boxedSum")
-      s"""
-         |java.lang.Double $boxed =
-         |  graft.functions.VectorMath.orderedStructSum($a, $vIsLong, $vIsInt);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin
-    })
-    code
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => BoxedDouble.assign(ctx, ev,
+      s"graft.functions.VectorMath.orderedStructSum($a, $vIsLong, $vIsInt)"))
   override protected def withNewChildInternal(c: Expression): OrderedStructSum =
     copy(child = c)
+}
+
+/** Generated code that stores a kernel's boxed `java.lang.Double` result,
+  * a null return meaning SQL null (the HOF folds' `acc + null`). */
+private[functions] object BoxedDouble {
+  def assign(ctx: CodegenContext, ev: ExprCode, call: String): String = {
+    val boxed = ctx.freshName("boxed")
+    s"""
+       |java.lang.Double $boxed = $call;
+       |if ($boxed == null) { ${ev.isNull} = true; }
+       |else { ${ev.value} = $boxed.doubleValue(); }
+     """.stripMargin
+  }
 }
 
 /** The shared type check of the PQ kernels: (array<float> vector,
@@ -438,18 +446,18 @@ case class BigramOverlap(left: Expression, right: Expression)
 }
 
 /**
- * Session-level registration + Column API for the native expressions.
+ * Column API and SQL name table for the native expressions.
  *
- * `ensureRegistered` is idempotent and works on any session (no extensions
- * jar wiring needed — the driver may hand us an arbitrary session); the
- * builders are also injectable via [[GraftExtensions]] for
- * `spark.sql.extensions`-based deployments.
+ * The Column helpers build their expression nodes directly, so they work on
+ * any session, including one built without the graft functions registered.
+ * `builders` is the name table [[GraftExtensions]] injects for SQL text
+ * (`spark.sql.extensions`, or a session built by [[graft.GraftSession]]).
  */
 object GraftFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftSqlShim.{column, expression => e}
 
-  private def intArg(e: Expression, what: String): Int = e match {
+  private def intArg(arg: Expression, what: String): Int = arg match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
   }
@@ -476,57 +484,30 @@ object GraftFunctions {
       ShingleHashOverlap(args(0), args(1), intArg(args(2), "n")) },
     "graft_bigram_overlap" -> { args => BigramOverlap(args(0), args(1)) })
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
-  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-  def dotD(a: Column, b: Column): Column = call_function("graft_dot_d", a, b)
+  def cosine(a: Column, b: Column): Column = column(CosineSim(e(a), e(b)))
+  def dot(a: Column, b: Column): Column = column(DotProduct(e(a), e(b)))
+  def dotD(a: Column, b: Column): Column = column(DotProductD(e(a), e(b)))
   def centerDotL(q: Column, m: Column, v: Column): Column =
-    call_function("graft_center_dot_l", q, m, v)
+    column(CenterDotL(e(q), e(m), e(v)))
   def pqArgmin(vec: Column, cb: Column, s: Column, subDim: Column): Column =
-    call_function("graft_pq_argmin", vec, cb, s, subDim)
+    column(PqArgmin(e(vec), e(cb), e(s), e(subDim)))
   def pqDists(vec: Column, cb: Column, s: Column, subDim: Column): Column =
-    call_function("graft_pq_dists", vec, cb, s, subDim)
-  def adcSum(dt: Column, code: Column): Column = call_function("graft_adc_sum", dt, code)
-  /** Registry-free (built via the shim bridge): shared fold helpers call
-    * this without knowing whether their session registered the graft
-    * functions. */
-  def orderedSum(arr: Column): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      OrderedStructSum(org.apache.spark.sql.GraftSqlShim.expression(arr)))
-  def simhash64(tokens: Column): Column = call_function("graft_simhash64", tokens)
-  def minhashSig(tokens: Column, k: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_minhash_sig", tokens, lit(k))
-  }
-  def signBucket(vec: Column, planes: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_sign_bucket", vec, lit(planes))
-  }
-  def wordShingles(tokens: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_word_shingles", tokens, lit(n))
-  }
-  def wordShingleHashes(tokens: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_word_shingle_hashes", tokens, lit(n))
-  }
-  def stripAccents(text: Column): Column = call_function("graft_strip_accents", text)
-  def charBigrams(text: Column): Column = call_function("graft_char_bigrams", text)
+    column(PqDists(e(vec), e(cb), e(s), e(subDim)))
+  def adcSum(dt: Column, code: Column): Column = column(AdcSum(e(dt), e(code)))
+  def orderedSum(arr: Column): Column = column(OrderedStructSum(e(arr)))
+  def simhash64(tokens: Column): Column = column(SimHash64(e(tokens)))
+  def minhashSig(tokens: Column, k: Int): Column = column(MinHashSig(e(tokens), k))
+  def signBucket(vec: Column, planes: Int): Column = column(SignBucket(e(vec), planes))
+  def wordShingles(tokens: Column, n: Int): Column = column(WordShingles(e(tokens), n))
+  def wordShingleHashes(tokens: Column, n: Int): Column =
+    column(WordShingleHashes(e(tokens), n))
+  def stripAccents(text: Column): Column = column(StripAccents(e(text)))
+  def charBigrams(text: Column): Column = column(CharBigrams(e(text)))
   def sortedContains(v: Column, sortedArr: Column): Column =
-    call_function("graft_sorted_contains", v, sortedArr)
-  def bigramOverlap(a: Column, b: Column): Column =
-    call_function("graft_bigram_overlap", a, b)
-  def shingleHashOverlap(tokens: Column, sortedHashes: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_shingle_hash_overlap", tokens, sortedHashes, lit(n))
-  }
+    column(SortedContains(e(v), e(sortedArr)))
+  def bigramOverlap(a: Column, b: Column): Column = column(BigramOverlap(e(a), e(b)))
+  def shingleHashOverlap(tokens: Column, sortedHashes: Column, n: Int): Column =
+    column(ShingleHashOverlap(e(tokens), e(sortedHashes), n))
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injection point. */

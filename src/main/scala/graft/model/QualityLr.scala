@@ -51,7 +51,6 @@ object QualityLr {
     * y = the Gopher-style gate bit as 0/1. */
   def features(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.text.TextOps
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val toks = TextOps.tokens(col(textCol))
     docs
       .select(col(idCol).as("doc_id"),

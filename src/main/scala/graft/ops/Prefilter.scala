@@ -28,7 +28,6 @@ object Prefilter {
     * computed as a broadcast sorted-array predicate). */
   def semiJoinBySortedKeys(fact: DataFrame, factKey: String,
       keys: DataFrame, keyCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(fact.sparkSession)
     val arr = keys.agg(
       sort_array(collect_set(col(keyCol).cast("long"))).as("__keys"))
     fact.crossJoin(broadcast(graft.ops.Guards.scalar(arr)))
@@ -67,7 +66,6 @@ object Prefilter {
    */
   def bloomPrune(fact: DataFrame, factKey: String,
       keys: DataFrame, keyCol: String, mBits: Int, kHashes: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(fact.sparkSession)
     fact.crossJoin(broadcast(graft.ops.Guards.scalar(bloomBits(keys, keyCol, mBits, kHashes))))
       .filter(bloomPass(col(factKey), mBits, kHashes))
       .drop("__bits")
@@ -96,7 +94,6 @@ object Prefilter {
     * only shuffle is the 4-group final aggregate. */
   def bloomAudit(fact: DataFrame, factKey: String,
       keys: DataFrame, keyCol: String, mBits: Int, kHashes: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(fact.sparkSession)
     val exact = keys.agg(
       sort_array(collect_set(col(keyCol).cast("long"))).as("__keys"))
     fact.crossJoin(broadcast(graft.ops.Guards.scalar(bloomBits(keys, keyCol, mBits, kHashes))))

@@ -87,9 +87,12 @@ object EditDistanceBandRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** Runtime injection for sessions not built with `spark.sql.extensions`. */
+/** Runtime injection for sessions the engine does not build: a no-op on a
+  * session built with [[graft.functions.GraftExtensions]] (it already plans
+  * with both), so that session never runs [[EditDistanceBandRule]] twice. */
 object GraftPlans {
   def ensureInjected(spark: SparkSession): Unit = synchronized {
+    if (spark.sessionState.planner.strategies.contains(AsofJoinStrategy)) return
     val cur = spark.experimental.extraOptimizations
     if (!cur.contains(EditDistanceBandRule))
       spark.experimental.extraOptimizations = cur :+ EditDistanceBandRule

@@ -34,7 +34,6 @@ object CatalogEv {
     * candidates in the corpus), and their ratio. Brute-force scan by the
     * bounded-eval contract (q418/q28); the serving path stays ANN. */
   def q432RetrievalMetrics(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
     val q = e.filter(col("vec_id") % 25 === 0)

@@ -398,7 +398,6 @@ object CatalogExt {
     * earlier one — high values flag boilerplate/spam. Narrow projection on
     * the native shingle kernel; no shuffle. */
   def q54RepNgrams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val toks = TextOps.tokens(col("text"))
     Tables.documents(s, dir)
       .select(col("doc_id"),
@@ -898,7 +897,6 @@ object CatalogExt {
     * canon. roundtrip_ok = (normalized == original) is the engine-level
     * law; the oracle replays decorate + strip_accents + canon in SQL. */
   def q82NormalizeText(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .withColumn("decorated",
         translate(col("text"), "aeo", "áéö"))
@@ -939,7 +937,6 @@ object CatalogExt {
     * RRF needs no score calibration between the two modalities. */
   def q78RrfFusion(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val kwScored = Tables.documents(s, dir).select(
       col("doc_id").as("id"),
       size(filter(TextOps.tokens(col("text")), t => t === "spark"))

@@ -229,7 +229,6 @@ object CatalogGp {
     // (UTF8String re-walks from the start), i.e. O(L²) per document — the
     // native graft_char_bigrams kernel emits the identical bigram list in
     // ONE byte pass (bit-equal per its doc; guide §1.2-2 per-task work).
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val grams = IterativeLoop.cutLazy(docs
       .select(col("doc_id"),
         explode(graft.functions.GraftFunctions.charBigrams(col("text"))).as("bg")))

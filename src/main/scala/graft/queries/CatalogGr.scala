@@ -35,7 +35,6 @@ object CatalogGr {
     * contract as q28/q192; sums accumulate in element order so both
     * engines agree bit-for-bit. */
   def q418DimRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val dims = Seq(4, 8, 16, 32, 64)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").as("v"))

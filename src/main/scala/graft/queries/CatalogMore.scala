@@ -370,7 +370,6 @@ object CatalogMore {
     * design (the q28 shape); at 100 TB the same mining runs over the
     * LSH/IVF candidate sets (q30/q35) instead of all pairs. */
   def q191TripletMining(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),

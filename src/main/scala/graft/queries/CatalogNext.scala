@@ -1108,7 +1108,6 @@ object CatalogNext {
     * label×predicted confusion counts — the supervised read of the
     * vector space that q28/q192's retrieval metrics don't give. */
   def q326KnnLoo(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"), col("label").cast("long").as("label"))
     val q = emb.filter(col("vec_id") % 10 === 0)

@@ -246,7 +246,6 @@ object CatalogSci {
     * geometric weights are shared p^(d−1) literals built by repeated
     * multiplication; per-query RBO is a sorted fold over d. */
   def q240Rbo(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val k = 10
     val pw: Seq[Double] = Iterator.iterate(1.0)(_ * 0.9).take(k).toSeq
     // Round 15: the per-pair scoring used interpreted `aggregate(zip_with)`
@@ -320,7 +319,6 @@ object CatalogSci {
     geoMedianOf(Tables.embeddings(s, dir))
 
   private[graft] def geoMedianOf(embIn: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embIn.sparkSession)
     val scale = 1048576L // 2^20
     val wCap = 16777216L // 2^24
     // Round 16: native graft_dot_d — bit-compatible with the HOF fold it
@@ -496,7 +494,6 @@ object CatalogSci {
     * full silhouette needs. Centroids are the q73 fixed-point means
     * (one broadcast row); per-label means are sorted folds by vec_id. */
   def q245Silhouette(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
     val cents = graft.sim.Similarity
       .labelCentroids(emb, "label", "embedding")

@@ -584,7 +584,6 @@ object CatalogStats {
     * broadcast row — assignment is a narrow pipelined pass, no shuffle
     * on the vector side. Top-50 suspects. */
   def q224LabelNoise(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, dir)
     val cents = graft.sim.Similarity
       .labelCentroids(emb, "label", "embedding")

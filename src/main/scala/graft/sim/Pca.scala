@@ -42,7 +42,6 @@ object Pca {
   private def fit(df: DataFrame, vecCol: String, iterations: Int,
       quantBits: Int): (DataFrame, DataFrame) = {
     require(iterations >= 1, s"need at least one iteration, got $iterations")
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val scale = 1L << quantBits
     val lazyCut = (d: DataFrame) => graft.dedup.Dedup.lineageCutLazy(d)
 

@@ -29,7 +29,6 @@ object Similarity {
     * Deterministic: ties broken by candidate id ascending. */
   def cosineKnn(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
     val c = candidates.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
     val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
@@ -55,7 +54,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val s = queries.sparkSession
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
     val c = candidates.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
     val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
@@ -129,7 +127,6 @@ object Similarity {
     * miner. */
   def assignToCentroids(df: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, n: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     val centArr = cents
       .agg(sort_array(collect_list(struct(col("cent_id"), col("cent_v")))).as("__cents"))
     df.select(col(idCol).as("x_id"), col(vecCol).as("x_v"))
@@ -144,7 +141,6 @@ object Similarity {
     * e.g. one trained by [[kmeansCentroids]]. */
   def ivfKnnWith(queries: DataFrame, candidates: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     def assign(df: DataFrame, n: Int): DataFrame =
       assignToCentroids(df, cents, idCol, vecCol, n)
     val cells = assign(candidates, 1)
@@ -207,7 +203,6 @@ object Similarity {
   def kmeansCentroids(candidates: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 5): DataFrame = {
     require(k > 0 && iters >= 0, s"need k > 0 and iters >= 0, got k=$k iters=$iters")
-    GraftFunctions.ensureRegistered(candidates.sparkSession)
     val n = candidates.count()
     require(n > 0, "kmeansCentroids needs a non-empty candidate set")
     val stride = math.max(1L, n / k)
@@ -304,7 +299,6 @@ object Similarity {
   def rerankKnn(queries: DataFrame, candidates: DataFrame,
       idCol: String, vecCol: String, k1: Int, k2: Int): DataFrame = {
     require(k1 >= k2 && k2 > 0, s"need k1 >= k2 > 0, got k1=$k1 k2=$k2")
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     def codes(df: DataFrame, prefix: String): DataFrame =
       quantizeInt8(df, idCol, vecCol)
         .select(col("id").as(s"${prefix}_id"), col("qv").as(s"${prefix}_qv"),
@@ -353,7 +347,6 @@ object Similarity {
    */
   def hardNegatives(queries: DataFrame, candidates: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, j: Int, nProbe: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val own = assignToCentroids(queries, cents, idCol, vecCol, 1)
       .select(col("x_id").as("q_id"), col("cent_id").as("own_cent"))
     val probes = assignToCentroids(queries, cents, idCol, vecCol, nProbe + 1)
@@ -410,7 +403,6 @@ object Similarity {
     require(planes <= 16,
       s"lshKnn enumerates the 2^planes code space per query ($planes planes = " +
         s"${1 << planes} codes); use <= 16 planes or switch to ivfKnn for finer partitions")
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val c = candidates.select(col(idCol).as("c_id"), col(vecCol).as("c_v"),
       GraftFunctions.signBucket(col(vecCol), planes).as("bucket"))
     // All bucket ids within probeHamming sign flips of the query's bucket:
@@ -498,7 +490,6 @@ object Similarity {
       m: Int = 4, stride: Int = 40): DataFrame = {
     require(m >= 1 && stride >= 1 && k >= 1,
       s"need m, stride, k >= 1; got m=$m stride=$stride k=$k")
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val cb = candidates.filter(col(idCol) % stride === 0)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cent_v"))
       .agg(sort_array(collect_list(struct(col("cent_id"), col("cent_v"))))
@@ -644,8 +635,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int = 5,
       lambda: Double = 0.5): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
-    val s = queries.sparkSession
-    GraftFunctions.ensureRegistered(s)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
     val c = candidates.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
     val rel = graft.dedup.Dedup.lineageCutLazy(

@@ -71,7 +71,6 @@ object DocsPipeline {
     * the sink as periodic compaction. */
   def curateNearDup(docs: DataFrame, minQuality: Double,
       lateness: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     gated(docs, minQuality)
       .withColumn("simhash",
         graft.functions.GraftFunctions.simhash64(TextOps.tokens(TextOps.normalize(col("text")))))
@@ -109,7 +108,6 @@ object DocsPipeline {
     // distinct 8-grams than this is a corpus, and the driver-side collect
     // of the shingle strings (pre-hash) is where that mistake would hurt
     // first
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     require(!benchmark.isStreaming, "benchmark must be a static (bounded) frame")
     // round 16: the kernel hashes shingles in-task (shingledHashed), so the
     // collect ships 8 bytes per shingle and the driver never re-hashes.

@@ -1,17 +1,12 @@
 package graft.tools
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev-only: print one query's formatted executed plan (after AQE). */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, dir)
     // run THIS QueryExecution's own plan (count() would spawn a separate

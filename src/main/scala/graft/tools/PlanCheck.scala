@@ -1,17 +1,12 @@
 package graft.tools
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 /** Dev tool: condensed physical-plan audit of every catalog query, written
   * to PLANS.md. Flags the scale-relevant facts: join strategies, exchange
   * counts, pushed filters, codegen coverage. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of the query catalog\n\n")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev-only (round 15): where does a slow query's wall-clock go — real
@@ -21,15 +20,7 @@ object ProfileTop {
       else Seq("q420_boruvka_mst", "q445_grid_dbscan", "q446_incremental_cc",
         "q436_hook_components", "q417_rho_cycles", "q419_luby_mis",
         "q113_hits", "q440_jp_coloring")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new AtomicInteger(0)
@@ -45,13 +36,6 @@ object ProfileTop {
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       }
     })
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      val prot = graft.ops.FrameMemo.protectedIds
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!prot.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val qmap = SparkEntry.queries
     println(f"${"query"}%-26s ${"wall_s"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"taskS"}%8s ${"par"}%6s")
@@ -60,7 +44,7 @@ object ProfileTop {
       // warm run (also at the timed dir: footer caches, codegen)
       try fn(spark, dir).count() catch { case e: Throwable =>
         println(s"$name WARM-FAIL ${e.getMessage}") }
-      sweep()
+      Bench.sweep(spark)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       val t0 = System.nanoTime()
       try fn(spark, dir).count() catch { case e: Throwable =>
@@ -70,7 +54,7 @@ object ProfileTop {
       Thread.sleep(300)
       val ts = taskMs.get() / 1e3
       println(f"$name%-26s $wall%8.2f ${jobs.get()}%6d ${stages.get()}%7d ${tasks.get()}%7d $ts%8.2f ${ts / math.max(wall, 1e-9)}%6.2f")
-      sweep()
+      Bench.sweep(spark)
     }
     spark.stop()
   }

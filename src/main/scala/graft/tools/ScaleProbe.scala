@@ -1,5 +1,5 @@
 package graft.tools
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -172,7 +172,6 @@ object ScaleProbe {
         graft.plans.AsofJoinOp.asofJoin(left, right,
           Seq("k"), Seq("rk"), "t", "rt").count() },
       "q278_fuzzy_probe" -> { k: Int =>
-        graft.plans.GraftPlans.ensureInjected(spark)
         val custBase = Tables.customer(spark, "/root/testdata/sf0.1")
           .select(col("c_name"))
         val cust = (0 until k).map { i =>
@@ -279,11 +278,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("heavies")) {
       spark.range(1000000).count() // JVM/codegen warmup

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Directory-based scaling probe: times whole catalog queries (by their
  * SparkEntry names) against the sf0.1 base dir and the ×4/×10
@@ -24,12 +22,7 @@ object ScaleProbeDirs {
     val x4 = args.lift(1).getOrElse("/tmp/testdata_x4")
     val x10 = args.lift(2).getOrElse("/tmp/testdata_x10")
     val dirs = Seq(1 -> "/root/testdata/sf0.1", 4 -> x4, 10 -> x10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).count() // JVM warmup
     val qs = graft.SparkEntry.queries

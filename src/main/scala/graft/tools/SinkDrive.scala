@@ -3,7 +3,6 @@ package graft.tools
 import graft.queries.OrderSynth
 import graft.sinks.KeyedParquetSink
 import graft.streaming.OrdersPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only end-to-end drive of the streaming path: file stream of raw JSON
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object SinkDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("WARN")
     // R2-parity wiring: every setup stage logs start/ok/failed and fails
     // fast; completed actions emit one event per observed metric stage

@@ -3,10 +3,10 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.sinks.KeyedParquetSink
 import graft.streaming.{AmsObs, KvStreamSink, Quota, QuotaDoc, StreamingAgg, StreamingAmsF2, StreamingFingerprint}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -38,10 +38,7 @@ object StreamStateProbe {
     Files.createTempDirectory(prefix).toString
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

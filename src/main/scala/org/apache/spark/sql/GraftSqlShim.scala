@@ -12,11 +12,10 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Column ⇄ Expression bridge (round 16): lets the graft expression
-    * library build a Column from a native expression WITHOUT a session
-    * function-registry lookup — the combinators used inside shared helpers
-    * (e.g. the ordered-fold kernel) cannot assume the caller registered
-    * the graft functions on its session. */
+  /** Column ⇄ Expression bridge: lets the graft expression library build
+    * a Column from a native expression WITHOUT a session function-registry
+    * lookup, so its Column API works on any session, including one that
+    * never registered the graft functions. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =

@@ -102,7 +102,6 @@ class PropertySpec extends SparkSpec {
   test("law: WordShingles(kernel) = array_distinct∘transform(HOF) on random token arrays") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(s)
     // small vocab forces repeats (distinct-ness matters); lengths straddle n
     val genToks = for {
       len <- Gen.chooseNum(0, 24)
@@ -211,7 +210,6 @@ class PropertySpec extends SparkSpec {
   test("law: shingleHashOverlap = arrays_overlap of xxhash64-ed word shingles") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val word = Gen.oneOf("the", "a", "data", "key", "row", "merge", "scan", "x1", "y2")
     val genToks = Gen.chooseNum(0, 9).flatMap(k => Gen.listOfN(k, word))
     val cases = sample(genToks, 120).zipWithIndex.map { case (t, i) => (i.toLong, t) }
@@ -286,7 +284,6 @@ class PropertySpec extends SparkSpec {
   test("law: sortedContains = linear scan membership on random sorted long arrays") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val genCase: Gen[(Seq[Long], Long)] = for {
       xs <- Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue))
       probe <- Gen.oneOf(
@@ -306,7 +303,6 @@ class PropertySpec extends SparkSpec {
   test("law: stripAccents is idempotent and a no-op on its own output") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val genText: Gen[String] = Gen.listOf(Gen.oneOf(
       Gen.alphaNumChar, Gen.oneOf('á', 'é', 'ö', 'ü', 'ñ', 'ç', 'à', 'ï', ' ', '☃')))
       .map(_.mkString)

@@ -415,7 +415,6 @@ class DedupSpec extends SparkSpec {
     // differ in <= 3 bits MUST be found (the operator's deterministic
     // guarantee; pairs further apart in code space may be missed)
     import graft.functions.GraftFunctions
-    GraftFunctions.ensureRegistered(spark)
     val codes = emb.select(col("vec_id"),
       GraftFunctions.signBucket(col("embedding"), 16).as("code")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap

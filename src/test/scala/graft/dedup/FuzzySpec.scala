@@ -1,7 +1,6 @@
 package graft.dedup
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Laws for the native bigram kernel and blocked fuzzy linkage (q119
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
 class FuzzySpec extends SparkSpec {
 
   private def overlap(a: String, b: String): Long = {
-    GraftFunctions.ensureRegistered(spark)
     spark.sql(s"SELECT graft_bigram_overlap('$a', '$b')").head().getLong(0)
   }
 

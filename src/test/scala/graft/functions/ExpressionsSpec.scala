@@ -10,7 +10,6 @@ class ExpressionsSpec extends SparkSpec {
   private def df = {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     Seq(
       (1L, Seq("key", "agg", "row"), Seq(1.0f, 2.0f, 3.0f)),
       (2L, Seq("key", "agg", "row"), Seq(1.0f, 2.0f, 3.0f)),
@@ -83,7 +82,6 @@ class ExpressionsSpec extends SparkSpec {
   test("graft_word_shingles: equals the HOF composition it replaces (law)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     // real corpus text + handcrafted edges: repeats (distinct-ness), exact
     // n-length input, order of first occurrence
     val texts = Seq(
@@ -136,7 +134,6 @@ class ExpressionsSpec extends SparkSpec {
   test("strip_accents: precomposed, decomposed, non-mark unicode, ASCII, null") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val rows = Seq(
       "café",                 // precomposed é
       "café",                // decomposed e + combining acute (Mn)

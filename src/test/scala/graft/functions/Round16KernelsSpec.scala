@@ -17,7 +17,6 @@ class Round16KernelsSpec extends SparkSpec {
   test("graft_dot_d is bit-equal to the aggregate(zip_with) fold it replaced") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val rnd = new scala.util.Random(42)
     val rows = (1 to 64).map { i =>
       val n = 1 + rnd.nextInt(65)
@@ -36,7 +35,6 @@ class Round16KernelsSpec extends SparkSpec {
   test("graft_center_dot_l is bit-equal to the zip_with centering + fold") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 64).map { i =>
       val n = 1 + rnd.nextInt(65)
@@ -59,7 +57,6 @@ class Round16KernelsSpec extends SparkSpec {
   test("graft_ordered_sum is bit-equal to the foldSorted HOF (double, long and null)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     def hofFold(k: Column, v: Column): Column =
       aggregate(
         transform(sort_array(collect_list(struct(k.as("k"), v.as("v")))),
@@ -100,7 +97,6 @@ class Round16KernelsSpec extends SparkSpec {
   test("PQ kernels are bit-equal to the HOF encode/table/scan they replaced") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val rnd = new scala.util.Random(99)
     val m = 4
     val dim = 16 // subDim = 4
@@ -158,7 +154,6 @@ class Round16KernelsSpec extends SparkSpec {
       "element (same windows, same distinct set, same order)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog the quick brown fox",
       "a b a b a b a b",
@@ -181,7 +176,6 @@ class Round16KernelsSpec extends SparkSpec {
       "(incl. unicode and short strings)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val rows = Seq("hello world", "ab", "a", "", "héllo wörld ünïcode",
       "xx yy zz xx yy", "日本語テキスト").zipWithIndex
       .map { case (t, i) => (i.toLong, t) }
@@ -229,7 +223,6 @@ class Round16KernelsSpec extends SparkSpec {
   test("pqArgmin breaks exact-distance ties to the smaller codeword position") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     // two identical codewords -> every distance ties -> position 1 must win
     val vecs = Seq((1L, Seq(1.0f, 2.0f, 3.0f, 4.0f))).toDF("id", "v")
     val cb = Seq((10L, Seq(0.0f, 0.0f, 0.0f, 0.0f)), (20L, Seq(0.0f, 0.0f, 0.0f, 0.0f)))
@@ -239,5 +232,42 @@ class Round16KernelsSpec extends SparkSpec {
       .select(GraftFunctions.pqArgmin(col("v"), col("__cb"), lit(0), lit(4)))
       .head().getInt(0)
     assert(code === 1)
+  }
+
+  test("graft_dot_d and graft_center_dot_l are null on a null element, like their folds") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((Seq(Some(1.0), None), Seq(Some(2.0), Some(3.0)),
+        Seq(Some(1L), None), Seq(Some(0L), Some(0L))))
+      .toDF("a", "b", "q", "m")
+      .select(
+        GraftFunctions.dotD(col("a"), col("b")),
+        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+          lit(0.0), (acc, t) => acc + t),
+        GraftFunctions.centerDotL(col("q"), col("m"), col("b")),
+        aggregate(
+          zip_with(
+            zip_with(col("q"), col("m"), (q, m) => (q - m).cast("double")),
+            col("b"), (x, y) => x * y),
+          lit(0.0), (acc, t) => acc + t))
+    // as-is the projection is folded into the local relation (interpreted
+    // eval); the repartition keeps it in a codegen'd stage
+    Seq(df, df.repartition(1)).foreach { d =>
+      val r = d.head()
+      assert((0 until 4).forall(r.isNullAt), s"expected all null, got $r")
+    }
+  }
+
+  test("pqArgmin fails on an empty codebook instead of returning position 1") {
+    val s = spark
+    import s.implicits._
+    val e = intercept[Exception] {
+      Seq((Seq(1.0f, 2.0f), Seq.empty[(Long, Seq[Float])])).toDF("v", "cb")
+        .select(GraftFunctions.pqArgmin(col("v"), col("cb"), lit(0), lit(2)))
+        .head()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("graft_pq_argmin: empty codebook")), e.toString)
   }
 }

@@ -11,7 +11,6 @@ class TypeCheckSpec extends SparkSpec {
   private def df = {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     Seq((Seq(1.0, 2.0), Seq("a", "b"), "plain")).toDF("dvec", "toks", "str")
   }
 

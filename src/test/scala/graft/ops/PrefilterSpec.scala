@@ -28,7 +28,6 @@ class PrefilterSpec extends SparkSpec {
     val fact = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     val noKeys = Seq.empty[Long].toDF("o")
     assert(Prefilter.semiJoinBySortedKeys(fact, "k", noKeys, "o").count() === 0L)
-    GraftFunctions.ensureRegistered(s)
     val probes = Seq(Long.MinValue, -7L, 0L, 3L, 41L, 43L, Long.MaxValue)
       .toDF("v")
       .select(col("v"), GraftFunctions.sortedContains(col("v"),

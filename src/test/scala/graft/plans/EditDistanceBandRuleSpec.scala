@@ -20,8 +20,8 @@ class EditDistanceBandRuleSpec extends SparkSpec {
     out.toSeq
   }
 
+  // the test session is built with GraftExtensions, which inject the rule
   private lazy val words = {
-    GraftPlans.ensureInjected(spark)
     import spark.implicits._
     Seq("kitten", "sitting", "kitchen", "mitten", "flaw", "lawn",
       "graph", "graphs", "giraffe", "spark", "sparks", "sharks")

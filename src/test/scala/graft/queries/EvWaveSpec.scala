@@ -46,7 +46,6 @@ class EvWaveSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r).toMap
     // rebuild the ranked lists with the engine's scorer, then recompute
     // the metrics independently of the in-plan folds
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding"))
     val q = e.filter(col("vec_id") % 25 === 0)

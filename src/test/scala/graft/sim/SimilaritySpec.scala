@@ -56,7 +56,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("kmeansCentroids: spherical Lloyd improves inertia monotonically; trained IVF works") {
     import graft.functions.GraftFunctions
-    GraftFunctions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, sfDir)
     // spherical inertia = mean (1 - max cosine to any centroid): must not
     // degrade as Lloyd iterates (standard monotonicity, small FP slack)
@@ -273,7 +272,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("hardNegatives: only foreign cells, exact cosines, per-query shape") {
     import graft.functions.GraftFunctions
-    GraftFunctions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", k = 4, iters = 1)
     val queries = emb.filter(col("vec_id") % 50 === 0)
