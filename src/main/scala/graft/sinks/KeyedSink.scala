@@ -60,7 +60,7 @@ import org.apache.spark.storage.StorageLevel
  * are listed and their schema read in-process, with no Spark job; and the
  * merge, window dedup and write share ONE hash exchange on the bucket id,
  * into at most `defaultParallelism` write tasks that still write one file
- * per bucket.
+ * per bucket. `read` and `readAt` build their frame the same job-free way.
  */
 final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
     retainManifests: Int = 2) {
@@ -270,11 +270,15 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
   }
 
   /** Current committed keyed state, if any epoch has been committed. */
-  def read(spark: SparkSession): Option[DataFrame] = {
-    val versions = currentVersions(spark)
+  def read(spark: SparkSession): Option[DataFrame] =
+    readVersions(spark, fs(spark), currentVersions(spark))
+
+  /** The rows of the manifest `versions`, built with no Spark job (see
+    * `readVersionDirs`); None for an empty manifest. */
+  private def readVersions(spark: SparkSession, hfs: FileSystem,
+      versions: Map[Long, String]): Option[DataFrame] =
     if (versions.isEmpty) None
-    else Some(spark.read.parquet(versions.map { case (b, v) => bucketDataDir(b, v).toString }.toSeq: _*))
-  }
+    else Some(readVersionDirs(spark, hfs, versions.toSeq.sorted.map { case (b, v) => bucketDataDir(b, v) }))
 
   /** Epochs readable right now, oldest first — bounded by `retainManifests`
     * (GC keeps every version the retained manifests reference). */
@@ -288,12 +292,6 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
   def readAt(spark: SparkSession, epochId: Long): Option[DataFrame] = {
     val hfs = fs(spark)
     val p = manifestPath(epochId)
-    if (!hfs.exists(p)) None
-    else {
-      val versions = readManifest(hfs, p)
-      if (versions.isEmpty) None
-      else Some(spark.read.parquet(
-        versions.map { case (b, v) => bucketDataDir(b, v).toString }.toSeq: _*))
-    }
+    if (!hfs.exists(p)) None else readVersions(spark, hfs, readManifest(hfs, p))
   }
 }

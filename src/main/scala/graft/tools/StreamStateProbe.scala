@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.{GraftSession, Tables}
 import graft.sinks.KeyedParquetSink
-import graft.streaming.{AmsObs, KvStreamSink, Quota, QuotaDoc, StreamingAgg, StreamingAmsF2, StreamingFingerprint}
+import graft.streaming.{AmsObs, Quota, QuotaDoc, StreamingAgg, StreamingAmsF2, StreamingFingerprint}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
  * salted user buckets) stays fixed — the 100 TB shape: an unbounded
  * stream against a bounded entity universe. A component passes when its
  * measured state (state-store rows for flatMapGroupsWithState; sink
- * rows/bytes for the incremental foreachBatch aggregates; live segments
- * + epoch-marker bytes for the KV sink) is FLAT across k. Each ×k run
- * feeds its input in 4 micro-batches so per-epoch merge behavior — not
- * one giant batch — is what's measured.
+ * rows/bytes for the incremental foreachBatch aggregates) is FLAT
+ * across k. Each ×k run feeds its input in 4 micro-batches so per-epoch
+ * merge behavior — not one giant batch — is what's measured.
  */
 object StreamStateProbe {
 
@@ -186,30 +185,6 @@ object StreamStateProbe {
       val ndBytes = dirBytes(Paths.get(docsPath)) + dirBytes(Paths.get(labelsPath))
       println(f"neardup-cc-docs      $k%-4d ${universe.count() * k * 1L}%-11d ${docsRows + labelRows}%-11d $ndBytes%-12d docs=$docsRows labels=$labelRows (paired only); vs-batch-diff=$diff")
       universe.unpersist(blocking = false)
-    }
-
-    // ---- X334b KV stream sink + compaction: segments bounded forever ----
-    ks.foreach { k =>
-      val path = tmp("sprobe-kv")
-      val in = evK(k)
-        .select(concat(lit("u"), pmod(col("user_id"), lit(997))).as("data_key"),
-          col("value"))
-      // slice by row hash: data_key is the only id column here
-      val slices = (0 until 4).map(e =>
-        in.filter(pmod(abs(hash(col("data_key"), col("value"))), lit(4)) === e))
-      slices.zipWithIndex.foreach { case (b, e) =>
-        KvStreamSink.handleBatch(path, "data_key", buckets = 8,
-          compactOver = 12)(b, e.toLong)
-      }
-      val m = graft.sources.KvStore.readManifest(Paths.get(path)).get
-      val epochBytes = Files.size(Paths.get(path).resolve("_epoch"))
-      // LIVE state = the current manifest's segments (keyspace-bounded
-      // after compaction); the directory additionally holds ONE grace
-      // generation (KvCompact's snapshot-isolation window, sized by the
-      // last epoch's raw appends) — report both so the bound is honest
-      val liveBytes = m.segments
-        .map(s => Files.size(Paths.get(path).resolve("data").resolve(s))).sum
-      println(f"kv-sink+compact      $k%-4d ${in.count()}%-11d ${m.segments.size}%-11d $liveBytes%-12d live-segments(cap 12+burst); dir-with-grace-window=${dirBytes(Paths.get(path))} B; epoch-marker=$epochBytes B")
     }
 
     spark.stop()

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import graft.SparkSpec
 import org.apache.spark.{ListenerBusDrain, SparkThrowable}
 import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -244,6 +244,30 @@ class KeyedSinkSpec extends SparkSpec {
     }
     val want = (0 until 2000).map(i => s"k$i" -> (if (i % 7 == 0) -i else i)).toMap
     assert(state(sink) === want)
+
+    // reading the state back starts no job either, and yields what a plain
+    // parquet read of the manifest's version dirs yields
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobStarts = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobStarts)
+    val (latest, atLatest) =
+      try {
+        val frames = (sink.read(spark).get, sink.readAt(spark, 1).get)
+        ListenerBusDrain(spark.sparkContext)
+        frames
+      } finally spark.sparkContext.removeSparkListener(jobStarts)
+    assert(jobs.get === 0, "building the read frames started Spark jobs")
+    val versionDirs = """"(\d+)":"([^"]+)"""".r.findAllMatchIn(manifests(dir).last._2)
+      .map(m => s"$dir/buckets/__bucket=${m.group(1)}/${m.group(2)}").toSeq
+    assert(versionDirs.size > threshold)
+    val plain = spark.read.parquet(versionDirs: _*)
+    Seq(latest, atLatest).foreach { frame =>
+      assert(frame.schema === plain.schema)
+      assert(frame.collect().sortBy(_.getString(0)).toSeq === plain.collect().sortBy(_.getString(0)).toSeq)
+    }
   }
 
   test("an empty zero-partition batch commits its epoch and leaves the state unchanged") {
