@@ -1,11 +1,21 @@
 package graft
 
+import graft.io.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet table loading for the local TPC-H-ish testdata (TESTDATA.md). */
+/** Parquet table loading for the local TPC-H-ish testdata (TESTDATA.md).
+  *
+  * Each read is given its schema, taken from the table file's footer on the
+  * driver by [[graft.io.ParquetSchema]]. A bare `spark.read.parquet` would
+  * run a Spark job per read to infer the same schema, a large share of a
+  * short catalog query's fixed cost. The footer schema is the one inference
+  * would pick, converted under the session's conf at call time, which is
+  * why `events` sets `nanosAsLong` before it reads. */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetSchema.of(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -19,7 +29,9 @@ object Tables {
    * generations: TIMESTAMP(NANOS) (which Spark's reader rejects —
    * [PARQUET_TYPE_ILLEGAL] — so we read nanos as long via the legacy conf and
    * truncate to µs, matching DuckDB's ns→µs behavior) and plain TIMESTAMP(µs)
-   * (readable directly). Branch on the physical schema so both work.
+   * (readable directly). Branch on the physical schema so both work. The
+   * conf is set before `apply` because the footer schema is converted under
+   * it: unset, the NANOS column fails to convert.
    */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -194,7 +195,7 @@ object FrameMemo {
         // Cold tier (`hot = false`): the lazy parquet scan with `layout`
         // applied — nothing pinned, nothing protected; consumers re-read
         // the files per run (the right trade for an index too big to pin).
-        if (!hot) layout(spark.read.parquet(path)) else {
+        if (!hot) layout(spark.read.schema(ParquetSchema.of(spark, path)).parquet(path)) else {
         // Hot tier: one eager cut per session, blocks protected from the
         // bench sweep (eviction of a localCheckpoint BREAKS later readers).
         // AQE is disabled for THIS materialization job only: under AQE the
@@ -217,7 +218,7 @@ object FrameMemo {
           catch { case scala.util.control.NonFatal(_) => () } // static confs
         }
         mat.conf.set("spark.sql.adaptive.enabled", "false")
-        val cp = IterativeLoop.cut(layout(mat.read.parquet(path)))
+        val cp = IterativeLoop.cut(layout(mat.read.schema(ParquetSchema.of(mat, path)).parquet(path)))
         val after = spark.sparkContext.getPersistentRDDs.keySet
         prot.synchronized { prot ++= (after -- mid) }
         cp

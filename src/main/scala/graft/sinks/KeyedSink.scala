@@ -2,14 +2,11 @@ package graft.sinks
 
 import java.util.UUID
 
+import graft.io.ParquetSchema
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -135,7 +132,7 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
       .filter(hfs.exists)
     val merged =
       if (existingDirs.isEmpty) incoming
-      else readVersionDirs(spark, hfs, existingDirs)
+      else readVersionDirs(spark, existingDirs)
         .withColumn("__bucket", bucketOf(col(keyCol)))
         .withColumn("__w", lit(0))
         .withColumn("__seq", lit(-1L))
@@ -169,24 +166,17 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
 
   /** The committed rows of `dirs`, read in groups no larger than the
     * session's parallel-listing threshold so every group is listed serially
-    * in-process instead of by a listing job, and with the schema of one
-    * file's footer so no schema-inference job runs. That is the schema
-    * inference would pick, so `unionByName` rejects a drifted batch as before. */
-  private def readVersionDirs(spark: SparkSession, hfs: FileSystem, dirs: Seq[Path]): DataFrame = {
+    * in-process instead of by a listing job, and with the footer schema of
+    * the first dir ([[graft.io.ParquetSchema]]) so no schema-inference job
+    * runs. That is the schema inference would pick, so `unionByName` rejects
+    * a drifted batch as before. */
+  private def readVersionDirs(spark: SparkSession, dirs: Seq[Path]): DataFrame = {
     val groupSize = math.max(1,
       spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
-    val schema = footerSchema(hfs, dirs.head)
+    val schema = ParquetSchema.of(spark, dirs.head.toString)
     dirs.grouped(groupSize)
       .map(g => spark.read.schema(schema).parquet(g.map(_.toString): _*))
       .reduce(_ union _)
-  }
-
-  /** The row schema Spark recorded in the footer of version dir `dir`'s file. */
-  private def footerSchema(hfs: FileSystem, dir: Path): StructType = {
-    val file = hfs.listStatus(dir).map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hfs.getConf))
-    val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData finally reader.close()
-    DataType.fromJson(meta.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
   }
 
   /** Upsert a (batch) DataFrame: incoming rows win over existing rows on keyCol;
@@ -271,14 +261,13 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
 
   /** Current committed keyed state, if any epoch has been committed. */
   def read(spark: SparkSession): Option[DataFrame] =
-    readVersions(spark, fs(spark), currentVersions(spark))
+    readVersions(spark, currentVersions(spark))
 
   /** The rows of the manifest `versions`, built with no Spark job (see
     * `readVersionDirs`); None for an empty manifest. */
-  private def readVersions(spark: SparkSession, hfs: FileSystem,
-      versions: Map[Long, String]): Option[DataFrame] =
+  private def readVersions(spark: SparkSession, versions: Map[Long, String]): Option[DataFrame] =
     if (versions.isEmpty) None
-    else Some(readVersionDirs(spark, hfs, versions.toSeq.sorted.map { case (b, v) => bucketDataDir(b, v) }))
+    else Some(readVersionDirs(spark, versions.toSeq.sorted.map { case (b, v) => bucketDataDir(b, v) }))
 
   /** Epochs readable right now, oldest first — bounded by `retainManifests`
     * (GC keeps every version the retained manifests reference). */
@@ -292,6 +281,6 @@ final class KeyedParquetSink(path: String, keyCol: String, numBuckets: Int = 64,
   def readAt(spark: SparkSession, epochId: Long): Option[DataFrame] = {
     val hfs = fs(spark)
     val p = manifestPath(epochId)
-    if (!hfs.exists(p)) None else readVersions(spark, hfs, readManifest(hfs, p))
+    if (!hfs.exists(p)) None else readVersions(spark, readManifest(hfs, p))
   }
 }

@@ -37,7 +37,7 @@ object BuildX10 {
 
     def replicate(table: String, keyCols: Seq[String],
         suffixTokensIn: Option[String] = None): Unit = {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = graft.Tables(spark, src, table)
       val df = (0 until copies).map { i =>
         var d: DataFrame = base
         keyCols.foreach { c =>
@@ -68,7 +68,7 @@ object BuildX10 {
       Files.move(part, Paths.get(s"$out/$table.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
       deleteRec(Paths.get(tmp))
-      println(s"[x10] $table: ${spark.read.parquet(s"$out/$table.parquet").count()} rows")
+      println(s"[x10] $table: ${graft.Tables(spark, out, table).count()} rows")
     }
 
     def deleteRec(p: Path): Unit = {
@@ -103,7 +103,7 @@ object BuildX10 {
     * is a workload choice — this gate measures the algorithms). */
   private def replicateEmbeddings(spark: SparkSession, src: String,
       out: String, copies: Int): Unit = {
-    val base = spark.read.parquet(s"$src/embeddings.parquet")
+    val base = graft.Tables(spark, src, "embeddings")
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     def mask(i: Int): Array[Float] =
       Array.tabulate(dim) { j =>
@@ -131,6 +131,6 @@ object BuildX10 {
     Files.list(Paths.get(tmp)).iterator().asScala.toSeq
       .foreach(Files.deleteIfExists(_))
     Files.deleteIfExists(Paths.get(tmp))
-    println(s"[x10] embeddings: ${spark.read.parquet(s"$out/embeddings.parquet").count()} rows (sign-masked copies)")
+    println(s"[x10] embeddings: ${graft.Tables(spark, out, "embeddings").count()} rows (sign-masked copies)")
   }
 }

@@ -42,12 +42,12 @@ object ProfileTop {
     names.foreach { name =>
       val fn = qmap(name)
       // warm run (also at the timed dir: footer caches, codegen)
-      try fn(spark, dir).count() catch { case e: Throwable =>
+      try Bench.materialize(fn(spark, dir)) catch { case e: Throwable =>
         println(s"$name WARM-FAIL ${e.getMessage}") }
       Bench.sweep(spark)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       val t0 = System.nanoTime()
-      try fn(spark, dir).count() catch { case e: Throwable =>
+      try Bench.materialize(fn(spark, dir)) catch { case e: Throwable =>
         println(s"$name FAIL ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; give the bus a beat

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-session persistence of [[FrameMemo.cachedPersistent]]: the
@@ -97,6 +100,44 @@ class FrameMemoPersistSpec extends SparkSpec {
       val part = reloaded.queryExecution.executedPlan.outputPartitioning
       assert(part.toString.toLowerCase.contains("hashpartitioning(id"),
         s"reloaded frame lost its layout: $part")
+    }
+  }
+
+  test("re-opening a built index starts no schema-inference job, on either tier") {
+    withRoot { root =>
+      FrameMemo.invalidate()
+      FrameMemo.cachedPersistent(spark, "pmemo-open:v1", "fp-a")(frame())
+      val sc = spark.sparkContext
+      // a bare parquet read infers its schema in a job whose call site is the
+      // reader's `parquet` call; the hot tier's own jobs are its eager cut
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.synchronized(jobs ++= e.stageInfos.map(_.name))
+      }
+      def opened(hot: Boolean): (DataFrame, Seq[String]) = {
+        FrameMemo.invalidate()
+        ListenerBusDrain(sc)
+        jobs.clear()
+        sc.addSparkListener(l)
+        try {
+          val df = FrameMemo.cachedPersistent(spark, "pmemo-open:v1", "fp-a",
+            layout = _.repartition(col("id")), hot = hot)(sys.error("reload path must not rebuild"))
+          ListenerBusDrain(sc)
+          (df, jobs.synchronized(jobs.toSeq))
+        } finally sc.removeSparkListener(l)
+      }
+      val (cold, coldJobs) = opened(hot = false)
+      assert(coldJobs.isEmpty, s"cold open started jobs: $coldJobs")
+      val (hot, hotJobs) = opened(hot = true)
+      assert(hotJobs.nonEmpty, "the hot tier materializes its cut at open")
+      assert(!hotJobs.exists(_.startsWith("parquet at")),
+        s"hot open ran a schema-inference job: $hotJobs")
+      // the layout-survival law holds on the footer-schema read
+      val part = hot.queryExecution.executedPlan.outputPartitioning
+      assert(part.toString.toLowerCase.contains("hashpartitioning(id"),
+        s"reloaded frame lost its layout: $part")
+      assert(cold.orderBy("id").collect().toSeq === hot.orderBy("id").collect().toSeq)
     }
   }
 

@@ -5,10 +5,13 @@ import java.io.File
 import scala.collection.mutable.ArrayBuffer
 
 import graft.SparkSpec
+import graft.io.PlainParquet
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.{ListenerBusDrain, SparkThrowable}
 import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -148,6 +151,34 @@ class KeyedSinkSpec extends SparkSpec {
     // and a subsequent committed epoch proceeds normally
     sink.upsert(df("b" -> 2), epochId = 2)
     assert(state(sink) === Map("a" -> 1, "b" -> 2))
+  }
+
+  test("a version file without Spark's schema key reads through the footer converter") {
+    val dir = tmpDir("ks-nokey")
+    val sink = new KeyedParquetSink(dir, "data_key", numBuckets = 1)
+    sink.upsert(df("a" -> 1, "b" -> 2), epochId = 0)
+    val Seq(version) = new File(s"$dir/buckets/__bucket=0").listFiles().toSeq
+    version.listFiles().foreach(f => assert(f.delete()))
+    // the same rows, rewritten by a writer that records no Spark row schema
+    val schema = Types.buildMessage()
+      .required(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("data_key")
+      .required(PrimitiveTypeName.INT32).named("v")
+      .named("spark_schema")
+    PlainParquet.write(s"$version/part-00000-plain.parquet", schema,
+      Seq(Seq("data_key" -> "a", "v" -> 1), Seq("data_key" -> "b", "v" -> 2)))
+    assert(state(sink) === Map("a" -> 1, "b" -> 2))
+    sink.upsert(df("b" -> 20), epochId = 1)
+    assert(state(sink) === Map("a" -> 1, "b" -> 20))
+  }
+
+  test("a committed version dir with no data file fails naming the dir") {
+    val dir = tmpDir("ks-nofile")
+    val sink = new KeyedParquetSink(dir, "data_key", numBuckets = 1)
+    sink.upsert(df("a" -> 1), epochId = 0)
+    val Seq(version) = new File(s"$dir/buckets/__bucket=0").listFiles().toSeq
+    version.listFiles().foreach(f => assert(f.delete()))
+    val e = intercept[AnalysisException](sink.read(spark))
+    assert(e.getMessage.contains(version.getPath))
   }
 
   test("fault injection: crash BETWEEN data staging and manifest commit, then replay recovers") {
