@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
 /** The one way the engine builds a session: Bench, Verify, Smoke, the
   * `graft.tools` mains and the test fixture all run under [[conf]] with the
   * [[GraftExtensions]] injected, so tests check the optimizer config that
-  * is benched. */
+  * is benched. The Hadoop side is not in [[conf]]: the engine's classpath
+  * `core-site.xml` installs the `file:` file system ([[graft.io.NioLocalFileSystem]])
+  * for every Hadoop `Configuration` in the JVM, so sessions built elsewhere
+  * get it too. */
 object GraftSession {
   def conf(cpus: Int): Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> cpus.toString,

@@ -1,6 +1,8 @@
 package graft
 
 import graft.io.ParquetSchema
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loading for the local TPC-H-ish testdata (TESTDATA.md).
@@ -10,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run a Spark job per read to infer the same schema, a large share of a
   * short catalog query's fixed cost. The footer schema is the one inference
   * would pick, converted under the session's conf at call time, which is
-  * why `events` sets `nanosAsLong` before it reads. */
+  * why `events` sets `nanosAsLong` before it reads a NANOS file. */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -29,12 +31,15 @@ object Tables {
    * generations: TIMESTAMP(NANOS) (which Spark's reader rejects —
    * [PARQUET_TYPE_ILLEGAL] — so we read nanos as long via the legacy conf and
    * truncate to µs, matching DuckDB's ns→µs behavior) and plain TIMESTAMP(µs)
-   * (readable directly). Branch on the physical schema so both work. The
-   * conf is set before `apply` because the footer schema is converted under
-   * it: unset, the NANOS column fails to convert.
+   * (readable directly). Branch on the physical schema so both work. Only a
+   * NANOS file sets the conf on the caller's session, before `apply`,
+   * because the footer schema is converted under it (unset, the column
+   * fails to convert) and the scan reads the file under it when it runs; a
+   * µs file leaves the session's conf as it found it.
    */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (nanosTs(ParquetSchema.stored(s, s"$d/events.parquet")))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -47,6 +52,12 @@ object Tables {
           org.apache.spark.sql.functions.col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
   }
+  private def nanosTs(stored: MessageType): Boolean =
+    stored.containsField("ts") && (stored.getType(stored.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+      case _ => false
+    })
+
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

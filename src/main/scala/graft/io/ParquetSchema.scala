@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -29,7 +30,16 @@ import org.apache.spark.sql.types.StructType
  */
 object ParquetSchema {
 
-  def of(spark: SparkSession, path: String): StructType = {
+  def of(spark: SparkSession, path: String): StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer(spark, path),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** The parquet schema stored in the footer [[of]] reads, unconverted, so
+    * it does not depend on the session's conf. */
+  def stored(spark: SparkSession, path: String): MessageType =
+    footer(spark, path).getParquetMetadata.getFileMetaData.getSchema
+
+  private def footer(spark: SparkSession, path: String): Footer = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -40,10 +50,8 @@ object ParquetSchema {
       }
     val file = firstDataFile(fs, root).getOrElse(throw new AnalysisException(
       "UNABLE_TO_INFER_SCHEMA", Map("format" -> s"Parquet (no data file under ${root.getPath})")))
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
   }
 
   private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =

@@ -37,8 +37,10 @@ class TablesSchemaSpec extends SparkSpec {
     finally sc.removeSparkListener(l)
   }
 
+  /** Runs `body` with the key set to `value` or unset (`getAll` holds only
+    * keys that are set; `getOption` would read an unset key's default). */
   private def withNanosAsLong[T](value: Option[String])(body: => T): T = {
-    val prev = spark.conf.getOption(nanosKey)
+    val prev = spark.conf.getAll.get(nanosKey)
     value.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
     try body
     finally prev.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
@@ -69,6 +71,13 @@ class TablesSchemaSpec extends SparkSpec {
       val old = spark.read.parquet(s"$dir/events.parquet")
         .withColumn("ts", col("ts").cast(TimestampType))
       assert(ev.schema === old.schema, s"nanosAsLong before = $before")
+    }
+  }
+
+  test("Tables.events on TIMESTAMP(us) data leaves nanosAsLong as it found it, unset or set") {
+    for (before <- Seq(None, Some("true"), Some("false"))) withNanosAsLong(before) {
+      Tables.events(spark, "perfbench/data/sf0.01").limit(5).collect()
+      assert(spark.conf.getAll.get(nanosKey) === before, s"nanosAsLong before = $before")
     }
   }
 

@@ -47,8 +47,7 @@ class ParquetReadLintSpec extends AnyFunSuite {
   /** Line numbers of reader chains in `source` that reach `.parquet(` with
     * no `.schema(` call before it. */
   def bareReads(source: String): Seq[Int] = {
-    val uncommented = "(?s)/\\*.*?\\*/".r.replaceAllIn(source, m => "\n" * m.matched.count(_ == '\n'))
-    val code = "(?m)(^|\\s)//.*$".r.replaceAllIn(uncommented, _.group(1))
+    val code = SourceLint.code(source)
     "\\.read\\b".r.findAllMatchIn(code).toSeq.flatMap { m =>
       val names = chain(code, m.end)
       if (names.contains("parquet") && !names.takeWhile(_ != "parquet").contains("schema"))
@@ -66,14 +65,9 @@ class ParquetReadLintSpec extends AnyFunSuite {
   }
 
   test("every parquet read under src/main/scala/graft gives Spark its schema") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val bad = ArrayBuffer.empty[String]
-    java.nio.file.Files.walk(root).forEach { p =>
-      if (p.toString.endsWith(".scala") && p.getFileName.toString != "ParquetSchema.scala") {
-        val source = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        bad ++= bareReads(source).map(line => s"$p:$line")
-      }
-    }
+    val bad = SourceLint.mainSources("src/main/scala/graft")
+      .filter(_._1.getFileName.toString != "ParquetSchema.scala")
+      .flatMap { case (p, source) => bareReads(source).map(line => s"$p:$line") }
     assert(bad.isEmpty,
       "parquet read(s) without .schema(...): each runs a schema-inference job; " +
         s"use spark.read.schema(ParquetSchema.of(spark, path)).parquet(path): ${bad.mkString(", ")}")
