@@ -96,26 +96,6 @@ object Bench {
       spark.range(200000000L).selectExpr("sum(id)").collect()
       (System.nanoTime() - t0) / 1e9
     }
-    // Second-chance pass (round 11, hardened round 12): any query whose
-    // min-of-3 lands >3× its baseline gets a fresh re-run block at the
-    // END of the whole pass — a genuine regression reproduces in
-    // isolation, transient neighbor/JVM pressure does not. The baseline
-    // is the per-query MIN across the working-tree detail file and the
-    // last two committed per-round details (BenchBaseline — the round-11
-    // one-round-stale baseline let a 3.4× transient commit un-re-run);
-    // sources that fail to parse are LOGGED, never silently skipped
-    // (fail-open here poisons timings without notice).
-    val prevMins: Map[String, Double] = BenchBaseline.merged(
-      BenchBaseline.defaultSources(sys.env.get("SPARK_GRAFT_BENCH_PREV"))
-        .flatMap { p =>
-          val parsed = try {
-            BenchBaseline.parseDetail(new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(p)), "UTF-8"))
-          } catch { case _: Throwable => None }
-          if (parsed.isEmpty)
-            System.err.println(s"[bench] second-chance baseline: no parsable detail in $p")
-          parsed
-        })
     // Explicit suffix-index attribution (round 12): the one-time
     // FrameMemo suffix builds used to land on whichever of
     // q396/q397/q406/q411 ran first, making those four queries'
@@ -139,7 +119,7 @@ object Bench {
     // Warm the sentinel's codegen path too, then take min-of-3.
     sentinel()
     val sentinelSamples = Seq.fill(3)(sentinel())
-    val firstPass = queries.zipWithIndex.map { case ((name, fn), i) =>
+    val sampled = indexBuild ++ queries.zipWithIndex.map { case ((name, fn), i) =>
       progress(s"timing ${i + 1}/${queries.size} $name")
       // min-of-3 for every query: the summed noise of single samples across
       // hundreds of fast queries is what destabilized the round-9 totals
@@ -150,19 +130,6 @@ object Bench {
     def minOf(runs: Seq[(Double, Boolean)]): Option[Double] = {
       val ok = runs.collect { case (s, true) => s }
       if (ok.isEmpty) None else Some(ok.min)
-    }
-    val rechecked = scala.collection.mutable.ListBuffer.empty[String]
-    val sampled = indexBuild ++ firstPass.map { case (name, runs) =>
-      val suspect = minOf(runs)
-        .exists(m => BenchBaseline.suspect(m, prevMins.get(name)))
-      if (!suspect) name -> runs
-      else {
-        progress(s"recheck $name")
-        rechecked += name
-        val rerun = Seq.fill(3)(timed(queries.toMap.apply(name)))
-        sweep(spark)
-        name -> (runs ++ rerun)
-      }
     }
     // Locale.ROOT: the f interpolator is locale-sensitive and a
     // comma-decimal default locale would print invalid JSON
@@ -193,15 +160,13 @@ object Bench {
     // window and parse whole.
     val samplesLine =
       s"""{"metric":"samples","sf":"$sfDir","sentinel_samples":$sentinelJson,"samples":$samplesJson}"""
-    val recheckedJson = rechecked.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailLine =
-      s"""{"metric":"detail","queries":$qs,"sf":"$sfDir","errors":$errorsJson,"rechecked":$recheckedJson,"unit":"sec","sentinel_sec":${fmt(sentinelSamples.min)},"value":${fmt(total)}}"""
+      s"""{"metric":"detail","queries":$qs,"sf":"$sfDir","errors":$errorsJson,"unit":"sec","sentinel_sec":${fmt(sentinelSamples.min)},"value":${fmt(total)}}"""
     val summaryLine =
       s"""{"metric":"total","sf":"$sfDir","n_queries":${queries.size},"errors":$errorsJson,"unit":"sec","sentinel_sec":${fmt(sentinelSamples.min)},"value":${fmt(total)}}"""
     // Partial (SPARK_GRAFT_ONLY) runs must not clobber the committed
-    // full-run artifact — it doubles as next run's second-chance
-    // baseline (a 3-query iteration once overwrote the full detail file
-    // and got swept into a commit).
+    // full-run record (a 3-query iteration once overwrote the full
+    // detail file and got swept into a commit).
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       if (only.isDefined) "BENCH_DETAIL_partial.json" else "BENCH_DETAIL.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),

@@ -310,7 +310,7 @@ object Curation {
       .select(concat(lit("|"), array_join(chars, "||"), lit("|")).as("repr"), col("n"))
     // per-round lineage cut: each round's repr derives from the last —
     // without it round k replays all k-1 predecessors
-    vocab = graft.dedup.Dedup.lineageCut(vocab)
+    vocab = graft.ops.IterativeLoop.cut(vocab)
     def symsCol = split(trim(col("repr"), "|"), "\\|\\|")
     // driver-tracked alphabet for the no-invisible-growth guard (merged
     // symbols are appended as they are accepted below)
@@ -416,7 +416,7 @@ object Curation {
           alphabet += (l + r)
           repr = replace(repr, lit(s"|$l||$r|"), lit(s"|$l$r|"))
         }
-        vocab = graft.dedup.Dedup.lineageCut(
+        vocab = graft.ops.IterativeLoop.cut(
           vocab.select(repr.as("repr"), col("n")))
       }
     }
@@ -625,7 +625,7 @@ object Curation {
     // exactly the stage boundaries a pipeline would write to storage.
     val exactKept = quality.join(exactCanon,
       col(idCol) === col("__keep_id"), "left_semi").persist()
-    val nearKept = Dedup.lineageCut(
+    val nearKept = graft.ops.IterativeLoop.cut(
       Dedup.dropNearDups(exactKept, idCol, textCol, dedupN, dedupThreshold))
     exactKept.unpersist()
     val dirty = contaminationFlags(nearKept, benchmark, idCol, textCol, contamN)

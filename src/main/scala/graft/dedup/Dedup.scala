@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.GraftFunctions
+import graft.ops.IterativeLoop
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,7 +19,8 @@ import org.apache.spark.sql.functions._
  *    cost O(sum_shingle df^2) instead of O(n^2) — the standard ppjoin-family
  *    baseline;
  *  - MinHash-LSH shuffles on (band, band-hash) buckets, candidates only
- *    (ScaleProbe, sf0.1 replicated, native shingle kernel: 20k docs / 34k
+ *    (sf0.1 replicated in memory as in SCALE.md, by the ScaleProbe main
+ *    removed after feb0fc4; native shingle kernel: 20k docs / 34k
  *    true pairs -> LSH 3.3s vs 6.7s full-index / 19.1s prefix on the same
  *    host — the gap widens with corpus size since LSH cost tracks
  *    candidates, not Σdf²);
@@ -274,8 +276,9 @@ object Dedup {
    * shingle posting; sample Σdf² rescales by sampleOneIn since df_sample ≈
    * df/sampleOneIn on the hot shingles that matter). Light tail (B small —
    * this corpus measures ~5, max df 25) keeps [[jaccardPairs]], which
-   * ScaleProbe measured faster because the prefix pipeline's extra
-   * shuffles cost more than its candidate reduction saves. A heavy-tailed
+   * measured faster (SCALE.md method; ScaleProbe, code at feb0fc4)
+   * because the prefix pipeline's extra shuffles cost more than its
+   * candidate reduction saves. A heavy-tailed
    * corpus (hot shingles with df in the 10⁴⁺ range) blows past any
    * constant limit and flips to [[jaccardPairsPrefix]], whose df-ordered
    * indexed prefix never contains the hot shingles. Both paths are exact
@@ -330,7 +333,7 @@ object Dedup {
    */
   def jaccardPairsDelta(stored: DataFrame, delta: DataFrame, idCol: String,
       textCol: String, n: Int = 3, threshold: Double = 0.6): DataFrame = {
-    val all = lineageCutLazy(
+    val all = IterativeLoop.cutLazy(
       shingledHashed(stored.select(col(idCol), col(textCol))
         .unionByName(delta.select(col(idCol), col(textCol))), idCol, textCol, n))
     val dIds = delta.select(col(idCol).as("id"))
@@ -381,7 +384,7 @@ object Dedup {
     // adaptive plan before the cut: 5 parquet scans / 6 shingle Generates
     // per query — a 100 TB corpus read five times). After the cut: one
     // scan, one shingle pass, three cheap checkpoint reads.
-    val inv = lineageCut(t.select(col("id"), explode(col("s")).as("sh")))
+    val inv = IterativeLoop.cut(t.select(col("id"), explode(col("s")).as("sh")))
     // one map-side-combinable count per span; the broadcast-ability of the
     // HOT list (df > maxDf) is by construction: it is tiny or the corpus
     // is template spam
@@ -500,7 +503,7 @@ object Dedup {
     // cut the positioned-token frame: the anti-join and the per-doc totals
     // both consume it — one text scan for the token side instead of two
     // (at 100 TB the raw-text column is the expensive read)
-    val tok = lineageCutLazy(docs.select(col(idCol).as("id"),
+    val tok = IterativeLoop.cutLazy(docs.select(col(idCol).as("id"),
         posexplode(toks).as(Seq("t0", "token")))
       .select(col("id"), (col("t0") + 1).cast("long").as("tp"), col("token")))
     val totals = tok.groupBy(col("id")).agg(count(lit(1)).as("n_toks"))
@@ -543,12 +546,12 @@ object Dedup {
     // cut the shingle frame once: both self-join sides and the size lookup
     // consume it — without the cut each pays a corpus scan + shingle pass
     // (the q64 lesson; the naive plan showed 5 FileScans / 4 Generates)
-    val t = lineageCutLazy(shingledHashed(docs, idCol, textCol, n))
+    val t = IterativeLoop.cutLazy(shingledHashed(docs, idCol, textCol, n))
     val inv = t.select(col("id"), explode(col("s")).as("sh"))
     val a = inv.alias("a"); val b = inv.alias("b")
     // cut the candidate aggregate too: BOTH directed union branches read it,
     // and its recompute would replay the whole self-join
-    val inter = lineageCutLazy(a
+    val inter = IterativeLoop.cutLazy(a
       .join(b, col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("x_id"), col("b.id").as("y_id"))
       .agg(count(lit(1)).as("c")))
@@ -640,18 +643,6 @@ object Dedup {
 
   // ---------------------------------------------------------- clustering ----
 
-  /** Eager per-round lineage cut — canonical implementation and full
-    * semantics now live in [[graft.ops.IterativeLoop.cut]] (round 10:
-    * the loop discipline was extracted into one shared combinator). */
-  private[graft] def lineageCut(df: DataFrame): DataFrame =
-    graft.ops.IterativeLoop.cut(df)
-
-  /** Lazy lineage cut for fixed-iteration loops — see
-    * [[graft.ops.IterativeLoop.cutLazy]] for the local-vs-reliable
-    * branch semantics. */
-  private[graft] def lineageCutLazy(df: DataFrame): DataFrame =
-    graft.ops.IterativeLoop.cutLazy(df)
-
   /**
    * Connected components over a near-dup pair list: labels every document
    * appearing in `pairs` with the SMALLEST doc id reachable through the
@@ -676,9 +667,9 @@ object Dedup {
    * component's min id. Scale shape per round: two equi-joins on node id +
    * one map-side-combinable min — all distributed; the driver loop carries
    * only the changed-label COUNT (convergence test), never data. Lineage is
-   * truncated every round via [[lineageCut]] (reliable on clusters with a
-   * checkpoint dir, local otherwise) so the plan doesn't grow with
-   * iterations.
+   * truncated every round via [[graft.ops.IterativeLoop.cut]] (reliable on
+   * clusters with a checkpoint dir, local otherwise) so the plan doesn't
+   * grow with iterations.
    */
   def connectedComponents(pairs: DataFrame,
       aCol: String = "a_id", bCol: String = "b_id", maxIter: Int = 20,
@@ -700,7 +691,8 @@ object Dedup {
     * — while cold rows take the normal equi-join. Same fixpoint (the law
     * spec plants a giant star and holds both paths' labelings equal); costs
     * one extra count + materialization per round, so it stays opt-in —
-    * measured (ScaleProbe, 800k-edge star, local[32], AQE on): default
+    * measured (ScaleProbe, code at feb0fc4; 800k-edge star, local[32],
+    * AQE on): default
     * 9.5 s vs hot-label 13.0 s, i.e. where AQE's skew split works the
     * fallback is pure overhead; reach for it only where it doesn't. */
   def connectedComponentsWithRounds(pairs: DataFrame,
@@ -738,7 +730,7 @@ object Dedup {
       .distinct()
       .repartition(col("v"))
       .persist()
-    var labels = lineageCut(
+    var labels = IterativeLoop.cut(
       edges.select(col("u").as("id")).distinct()
         .withColumn("component", col("id")))
     var changed = 1L
@@ -775,7 +767,7 @@ object Dedup {
         case Some(t) =>
           // materialize once: the hot count, the split, and the join all
           // re-read `propagated` below
-          val mid = lineageCut(propagated)
+          val mid = IterativeLoop.cut(propagated)
           val hotKeys = mid.groupBy(col("mid_component")).agg(count(lit(1)).as("__n"))
             .filter(col("__n") > t).select(col("mid_component"))
             .collect().map(_.get(0)).toSeq
@@ -797,12 +789,12 @@ object Dedup {
       // the frame the lineage cut materializes delivers the changed-label
       // count from the SAME job, replacing the per-round follow-up count()
       // scan — one job per round instead of two. Verified empirically on
-      // BOTH lineageCut paths (Spark 4.1: sum over 1..100 observed as
+      // BOTH IterativeLoop.cut paths (Spark 4.1: sum over 1..100 observed as
       // exactly 5050): in particular the reliable checkpoint(true) does NOT
       // double-deliver the metric through its checkpoint-write recompute.
       graft.ops.PlanProbe.offer(lid, iter + 1, next)
       val obs = org.apache.spark.sql.Observation()
-      val updated = lineageCut(next.observe(obs,
+      val updated = IterativeLoop.cut(next.observe(obs,
         coalesce(sum((col("next_component") =!= col("component")).cast("long")), lit(0L))
           .as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
@@ -834,7 +826,8 @@ object Dedup {
    * any such pair would have been an edge, putting both docs in one
    * component of which only the min id survives.
    *
-   * Measured (ScaleProbe, replicated sf0.1, local[32]): end to end 5.4 s at
+   * Measured (ScaleProbe, code at feb0fc4; sf0.1 replicated as in
+   * SCALE.md, local[32]): end to end 5.4 s at
    * 5k docs / 34.1 s at 20k docs with 34k planted pairs — cost tracks pair
    * generation; the components stage converged in 2 pointer-jump rounds at
    * every probed scale (rounds track cluster diameter, not corpus size).
@@ -1025,7 +1018,7 @@ object Dedup {
     // one materialized assignment: the self-join below references cells on
     // BOTH sides (plus the output base) — without the cut each reference
     // re-scans and re-assigns the full corpus
-    val cells = lineageCut(graft.sim.Similarity
+    val cells = IterativeLoop.cut(graft.sim.Similarity
       .assignToCentroids(embeddings, cents, idCol, vecCol, 1))
     val a = cells.select(col("cent_id"), col("x_id").as("a_id"), col("x_v").as("a_v"))
     val b = cells.select(col("cent_id"), col("x_id").as("b_id"), col("x_v").as("b_v"))
@@ -1060,7 +1053,7 @@ object Dedup {
       n: Int = 3): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
     val toks = graft.text.TextOps.tokens(col(textCol))
-    val grams = lineageCutLazy(docs
+    val grams = IterativeLoop.cutLazy(docs
       .select(col(idCol).as("id"), toks.as("w"))
       .filter(size(col("w")) >= n)
       .select(col("id"), explode(

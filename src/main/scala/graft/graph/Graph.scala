@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.ops.IterativeLoop
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
  */
 object Graph {
 
-  private def lazyCut(df: DataFrame): DataFrame =
-    graft.dedup.Dedup.lineageCutLazy(df)
-
   /** Fixed-point damped PageRank. Output: (node, rank) with rank a BIGINT
     * in units of scale⁻¹; rank ≈ scale × pagerank. Damping 85/100; the
     * teleport term ((15·scale)/100)/N uses the in-plan one-row node count
@@ -48,17 +46,17 @@ object Graph {
     // REGRESSED — the cached 32-partition scans traded one coalesced
     // exchange per round for 32 per-task overheads per reference (summed
     // task time 35 s → 120–200 s at sf0.1, worse at low core counts).
-    val e = lazyCut(edges
+    val e = IterativeLoop.cutLazy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
       .repartition(col("src")))
-    val nodes = lazyCut(
+    val nodes = IterativeLoop.cutLazy(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val eWithDeg = lazyCut(e.join(outdeg, "src"))
+    val eWithDeg = IterativeLoop.cutLazy(e.join(outdeg, "src"))
     val nTotal = nodes.agg(count(lit(1)).as("n_nodes"))
-    val base = lazyCut(nodes.crossJoin(broadcast(graft.ops.Guards.scalar(nTotal))))
+    val base = IterativeLoop.cutLazy(nodes.crossJoin(broadcast(graft.ops.Guards.scalar(nTotal))))
     val ranks0 = base
       .select(col("node"), expr(s"CAST($scale AS BIGINT) div n_nodes").as("rank"))
     // NOT fixedUntil: damped deltas shrink like scale·0.85^k, so hitting
@@ -66,7 +64,7 @@ object Graph {
     // rounds — an 8-round contract can never exit early and the per-round
     // convergence probes are pure overhead (measured: +25% on q83 when
     // this loop briefly ran through fixedUntil in round 11).
-    graft.ops.IterativeLoop.fixed(ranks0, iterations) { (ranks, _) =>
+    IterativeLoop.fixed(ranks0, iterations) { (ranks, _) =>
       val contrib = eWithDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"))
@@ -111,11 +109,11 @@ object Graph {
     // Round 15, measured and kept AS-IS: per-key cached edge copies
     // (eSrc/eDst persist) were tried and regressed like pageRank's — see
     // the note there.
-    val e = lazyCut(edges
+    val e = IterativeLoop.cutLazy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
       .repartition(col("src")))
-    val nodes = lazyCut(
+    val nodes = IterativeLoop.cutLazy(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
     val nTotal = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -132,13 +130,13 @@ object Graph {
     // the total's job materialize the aggregate once and the projection
     // re-read the persisted blocks. Values are untouched.
     def normalized(raw0: DataFrame, joinKey: String, outCol: String): DataFrame = {
-      val raw = lazyCut(raw0)
+      val raw = IterativeLoop.cutLazy(raw0)
       val tot = raw.agg(greatest(sum(col("raw")), lit(1L)).as("tot"))
-      lazyCut(raw.crossJoin(broadcast(graft.ops.Guards.scalar(tot)))
+      IterativeLoop.cutLazy(raw.crossJoin(broadcast(graft.ops.Guards.scalar(tot)))
         .select(col(joinKey).as("node"),
           expr(s"(raw * CAST($scale AS BIGINT)) div tot").as(outCol)))
     }
-    var hubs = lazyCut(nodes.crossJoin(broadcast(graft.ops.Guards.scalar(nTotal)))
+    var hubs = IterativeLoop.cutLazy(nodes.crossJoin(broadcast(graft.ops.Guards.scalar(nTotal)))
       .select(col("node"), expr(s"CAST($scale AS BIGINT) div n_nodes").as("hub")))
     var auths: DataFrame = hubs.select(col("node"), col("hub").as("auth"))
     // No early-exit probe here for the same reason as PageRank: the
@@ -247,9 +245,10 @@ object Graph {
    * like the max-hub star collapse on the following round (its
    * contraction is a MIN-hub star, which resolves in one). Convergence
    * is therefore fast because it depends on live-LABEL structure, never
-   * on graph diameter — the scrambled-path probes (ProbeHookCc: 500k-hop
-   * diameter) resolve in a handful of outer rounds where any
-   * min-label-propagation scheme needs O(diameter) — but the default
+   * on graph diameter — the scrambled-path probes (SCALE.md's ProbeHookCc
+   * rows, code at 7ee0217: 500k-hop diameter) resolve in a handful of
+   * outer rounds where any min-label-propagation scheme needs
+   * O(diameter) — but the default
    * maxOuter=20 cap is an EMPIRICAL margin, not a proven ⌈log₂ n⌉
    * theorem; `requireConverged` keeps a cap overrun a loud failure,
    * never a wrong answer; (2) flatten —
@@ -267,10 +266,9 @@ object Graph {
    */
   def hookComponents(edges: DataFrame, aCol: String = "x",
       bCol: String = "y", maxOuter: Int = 20): DataFrame = {
-    import graft.ops.IterativeLoop
     // self-loops kept: they mention a node, which therefore appears as a
     // singleton — the Dedup.connectedComponents contract
-    val und = lazyCut(edges
+    val und = IterativeLoop.cutLazy(edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .unionAll(edges.select(col(bCol).cast("long").as("u"),
         col(aCol).cast("long").as("v")))
@@ -372,7 +370,7 @@ object Graph {
    */
   def incrementalMerge(labels0: DataFrame, delta: DataFrame,
       aCol: String = "x", bCol: String = "y"): DataFrame = {
-    val d = lazyCut(delta
+    val d = IterativeLoop.cutLazy(delta
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y")))
     val dnodes = d.select(col("x").as("id"))
       .unionAll(d.select(col("y").as("id"))).distinct()
@@ -418,8 +416,8 @@ object Graph {
     // rounds. requireConverged stays false: the round cap is the
     // CONTRACT (the oracle replays exactly `rounds` peels), so a
     // still-moving capped run is the defined semantics, not an error.
-    val e = graft.ops.IterativeLoop.fixedUntil(e0, rounds,
-        sameAs = graft.ops.IterativeLoop.stationaryAgg(
+    val e = IterativeLoop.fixedUntil(e0, rounds,
+        sameAs = IterativeLoop.stationaryAgg(
           _.agg(count(lit(1))).collect().toSeq.map(_.getLong(0)))) { (ed, _) =>
       val keep = degrees(ed).filter(col("degree") >= k).select(col("id"))
       ed.join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
@@ -451,26 +449,26 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1, 32], got $rounds")
-    val e = lazyCut(edges
+    val e = IterativeLoop.cutLazy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
       .repartition(col("src")))
-    var dist = lazyCut(
+    var dist = IterativeLoop.cutLazy(
       seeds.select(col("id").cast("long").as("id")).distinct()
         .select(col("id"), lit(0L).as("hops")))
     var frontier = dist
     val lid = graft.ops.PlanProbe.loopId()
     for (r <- 1 to rounds) {
       // the frontier-sized join + anti-join is the shape that matters at
-      // 100×; offer it UNCUT to the plan audit before lazyCut hides it
+      // 100×; offer it UNCUT to the plan audit before cutLazy hides it
       val stepped = frontier
         .join(e, frontier("id") === e("src"))
         .select(col("dst").as("id"), lit(r.toLong).as("hops"))
         .distinct()
         .join(dist, Seq("id"), "left_anti")
       graft.ops.PlanProbe.offer(lid, r, stepped)
-      val next = lazyCut(stepped)
-      dist = lazyCut(dist.union(next))
+      val next = IterativeLoop.cutLazy(stepped)
+      dist = IterativeLoop.cutLazy(dist.union(next))
       frontier = next
     }
     dist
@@ -484,12 +482,12 @@ object Graph {
     // source frame (scan + union per round). Cut once like every other
     // loop invariant (the PageRank discipline; measured 4.2 → 2.6 s at
     // sf0.1 for q132).
-    val und = lazyCut(
+    val und = IterativeLoop.cutLazy(
       edges.select(col("a_id").as("src"), col("b_id").as("dst"))
         .union(edges.select(col("b_id").as("src"), col("a_id").as("dst"))))
     val labels0 = nodes.select(col("id"), col("seed").as("lab"),
       col("seed").isNotNull.as("seeded"))
-    val labels = graft.ops.IterativeLoop.fixed(labels0, rounds) { (labs, _) =>
+    val labels = IterativeLoop.fixed(labels0, rounds) { (labs, _) =>
       val votes = und
         .join(labs.filter(col("lab").isNotNull)
           .select(col("id").as("src"), col("lab")), "src")

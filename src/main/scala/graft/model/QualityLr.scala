@@ -118,7 +118,7 @@ object QualityLr {
     * materialized table instead of re-deriving shingles every round. */
   def trainAndScore(docs: DataFrame, idCol: String, textCol: String,
       rounds: Int = 8): DataFrame = {
-    val feat = graft.dedup.Dedup.lineageCutLazy(features(docs, idCol, textCol))
+    val feat = graft.ops.IterativeLoop.cutLazy(features(docs, idCol, textCol))
     score(feat, train(feat, rounds))
   }
 }

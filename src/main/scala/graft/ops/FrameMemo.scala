@@ -228,8 +228,8 @@ object FrameMemo {
 
   /** Drop every memo entry AND its backing blocks. Unpersisting the
     * protected localCheckpoint blocks here (not leaving them to the
-    * caller) matters for the multi-dir probe tools: ScaleProbeDirs /
-    * ProbeHookCc invalidate between directories, and with the round-14
+    * caller) matters for the multi-dir probe tool: ScaleProbeDirs
+    * invalidates between directories, and with the round-14
     * hot tier each dir's reload pins fresh blocks — without this sweep
     * they would accumulate un-protected AND un-unpersisted for the whole
     * probe run. Any frame obtained from the memo is dead after this call

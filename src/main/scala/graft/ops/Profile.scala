@@ -67,7 +67,7 @@ object Profile {
     val raw = floor((col("v").cast("double") - col("__vmin")) * parts /
       greatest(col("__vmax") - col("__vmin"), lit(java.lang.Double.MIN_NORMAL)))
       .cast("long")
-    val bucketed = graft.dedup.Dedup.lineageCutLazy(vc.crossJoin(broadcast(graft.ops.Guards.scalar(b)))
+    val bucketed = graft.ops.IterativeLoop.cutLazy(vc.crossJoin(broadcast(graft.ops.Guards.scalar(b)))
       .withColumn("__rb",
         when(col("v").isNull, lit(-1L))
           .when(col("v").cast("double").isNaN, lit(parts.toLong))
@@ -113,7 +113,7 @@ object Profile {
     // cut the distribution once: tot, the bounds aggregate, the bucketing,
     // and the offsets frame all consume it — without the cut each pays a
     // full base-table scan + shuffle (PLANS.md showed q85 at 5 FileScans)
-    val vc = graft.dedup.Dedup.lineageCutLazy(
+    val vc = graft.ops.IterativeLoop.cutLazy(
       df.filter(col(valueCol).isNotNull)
         .groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c")))
     val tot = vc.agg(sum(col("c")).as("n"))
@@ -142,7 +142,7 @@ object Profile {
       s"winsorize needs a numeric column, got ${df.schema(valueCol).dataType}")
     // percentile ranks are over the NON-NULL population (NULL is not an
     // ordered value, and `n` counting NULLs would shift every rank)
-    val vc = graft.dedup.Dedup.lineageCutLazy(
+    val vc = graft.ops.IterativeLoop.cutLazy(
       df.filter(col(valueCol).isNotNull)
         .groupBy(col(valueCol).as("v")).agg(count(lit(1)).as("c")))
     val cum = withCumBefore(vc).withColumn("ct", col("cb") + col("c"))

@@ -141,7 +141,8 @@ object CatalogBeh {
     threeCoreOf(edges)
   }
 
-  /** q374's peel on an explicit (x, y) edge frame (ScaleProbe). */
+  /** q374's peel on an explicit (x, y) edge frame (the entry SCALE.md's
+    * heavies table timed; probe code at feb0fc4). */
   private[graft] def threeCoreOf(edges: DataFrame): DataFrame = {
     // loop invariant, cut once and partitioned by the b side: the
     // per-round delta join (which removed neighbors did each survivor
@@ -265,7 +266,7 @@ object CatalogBeh {
   }
 
   /** q377's bucketed overlap join on explicit span/window frames
-    * (ScaleProbe entry point). */
+    * (the entry SCALE.md's heavies table timed; probe code at feb0fc4). */
   private[graft] def overlapOf(spans: DataFrame, wins: DataFrame): DataFrame = {
     val bucket = 604800L
     val sb = spans.withColumn("bk", explode(sequence(

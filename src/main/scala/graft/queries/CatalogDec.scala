@@ -43,7 +43,8 @@ object CatalogDec {
   def q361CoxPh(s: SparkSession, dir: String): DataFrame =
     coxOf(s, CatalogNext.survivalFrame(s, dir))
 
-  /** q361's core on an explicit (g, t, death) life frame (ScaleProbe;
+  /** q361's core on an explicit (g, t, death) life frame (the entry
+    * SCALE.md's heavies table timed; probe code at feb0fc4;
     * Newton round count exposed for the IterativeLoopSpec convergence
     * law — 6 rounds put a smooth 1-d Newton at machine precision, so an
     * extra round must not move the estimate). */

@@ -325,7 +325,7 @@ object CatalogDist {
     // broadcast scalar subqueries = separate executions, so without the
     // cut each re-ran the orders aggregate (the C10 missing-loop-invariant
     // pattern; guide §2.4). Values untouched.
-    val rfm = graft.dedup.Dedup.lineageCutLazy(o
+    val rfm = graft.ops.IterativeLoop.cutLazy(o
       .groupBy(col("o_custkey").as("k"))
       .agg(max(to_date(col("o_orderdate"))).as("last_d"),
         count(lit(1)).as("f"), sum(cents(col("o_totalprice"))).as("mv"))
@@ -335,7 +335,7 @@ object CatalogDist {
     def score(c: String, inverted: Boolean): DataFrame = {
       // the ranked global window feeds the four threshold aggregates (one
       // broadcast-scalar execution) — cut it so they read persisted blocks
-      val ranked = graft.dedup.Dedup.lineageCutLazy(rfm.select(col("k"), col(c))
+      val ranked = graft.ops.IterativeLoop.cutLazy(rfm.select(col("k"), col(c))
         .withColumn("rn", row_number().over(
           Window.orderBy(col(c), col("k"))).cast("long"))
         .withColumn("nn", count(lit(1)).over(Window.partitionBy())))

@@ -877,10 +877,10 @@ object CatalogNext {
       .select(col("i"), col("j"))
     // loop invariants materialized once: without the cut every round
     // re-runs the events self-join that builds the graph (8x the cost)
-    val nbr = graft.dedup.Dedup.lineageCutLazy(
+    val nbr = graft.ops.IterativeLoop.cutLazy(
       edges.select(col("i").as("a"), col("j").as("b"))
         .unionAll(edges.select(col("j").as("a"), col("i").as("b"))))
-    val deg = graft.dedup.Dedup.lineageCutLazy(
+    val deg = graft.ops.IterativeLoop.cutLazy(
       nbr.groupBy(col("a").as("item")).agg(count(lit(1)).as("d")))
     val twom = deg.agg(sum(col("d")).as("twom"))
     val x0 = deg.select(col("item"),
@@ -903,7 +903,7 @@ object CatalogNext {
       // duplicate is a full edge-sized pass per round). The cut
       // materializes bx once; both the max-abs job and the rescale
       // projection read the persisted blocks. Values untouched.
-      val bx = graft.dedup.Dedup.lineageCutLazy(
+      val bx = graft.ops.IterativeLoop.cutLazy(
         deg.join(ax, Seq("item"), "left")
           .crossJoin(broadcast(graft.ops.Guards.scalar(sdx))).crossJoin(broadcast(graft.ops.Guards.scalar(twom)))
           .select(col("item"),
@@ -1213,7 +1213,7 @@ object CatalogNext {
       .select(col("i"), col("j"))
     // materialize the graph once — 6 frontier rounds would otherwise
     // each re-run the events self-join
-    val nbr = graft.dedup.Dedup.lineageCutLazy(
+    val nbr = graft.ops.IterativeLoop.cutLazy(
       edges.select(col("i").as("a"), col("j").as("b"))
         .unionAll(edges.select(col("j").as("a"), col("i").as("b"))))
     val seeds = nbr.select(col("a").as("item")).distinct()
@@ -1228,7 +1228,7 @@ object CatalogNext {
       val stepped = dist.unionAll(frontier)
         .groupBy(col("seed"), col("node")).agg(min(col("d")).as("d"))
       graft.ops.PlanProbe.offer(lid, r, stepped)
-      dist = graft.dedup.Dedup.lineageCutLazy(stepped)
+      dist = graft.ops.IterativeLoop.cutLazy(stepped)
     }
     dist.filter(col("d") > 0)
       .groupBy(col("seed"))
@@ -1925,7 +1925,8 @@ object CatalogNext {
   def q348Textrank(s: SparkSession, dir: String): DataFrame =
     textrankOf(Tables.documents(s, dir))
 
-  /** q348's core on an explicit docs frame (ScaleProbe entry point). */
+  /** q348's core on an explicit docs frame (the entry SCALE.md's heavies
+    * table timed; probe code at feb0fc4). */
   private[graft] def textrankOf(docsDf: DataFrame): DataFrame =
     textrankScores(docsDf, rounds = 6)
       .orderBy(col("pr").desc, col("node")).limit(15)
@@ -1945,10 +1946,10 @@ object CatalogNext {
       .select(least(col("w1"), col("w")).as("x"),
         greatest(col("w1"), col("w")).as("y"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cw"))
-    val nbr = graft.dedup.Dedup.lineageCutLazy(
+    val nbr = graft.ops.IterativeLoop.cutLazy(
       pairs.select(col("x").as("a"), col("y").as("b"), col("cw"))
         .unionAll(pairs.select(col("y").as("a"), col("x").as("b"), col("cw"))))
-    val wout = graft.dedup.Dedup.lineageCutLazy(
+    val wout = graft.ops.IterativeLoop.cutLazy(
       nbr.groupBy(col("b").as("node")).agg(sum(col("cw")).as("wj")))
     val nNodes = wout.agg(count(lit(1)).as("nn"))
     val pr0 = wout.select(col("node"), lit(1.0).as("pr"))
@@ -2016,7 +2017,7 @@ object CatalogNext {
     // (one union branch each), and without the cut every branch re-ran the
     // two rank windows over the full table (the q360/q253 missing-
     // loop-invariant class; guide §2.4). Values untouched.
-    val ranked = graft.dedup.Dedup.lineageCutLazy(d
+    val ranked = graft.ops.IterativeLoop.cutLazy(d
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("z")).orderBy(col("yv"), col("c_custkey")))
         .cast("long"))

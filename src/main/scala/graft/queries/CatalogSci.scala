@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.IterativeLoop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -363,7 +364,7 @@ object CatalogSci {
           (col("swq").cast("double") / col("sw").cast("double") /
             lit(scale.toDouble)).as("coord"))
     }
-    val x4 = graft.ops.IterativeLoop.fixedEager(x0, 4)((x, _) => iterate(x))
+    val x4 = IterativeLoop.fixedEager(x0, 4)((x, _) => iterate(x))
     x4.select(col("label"), col("pos").cast("long").as("pos"), col("coord"))
       .orderBy(col("label"), col("pos"))
   }
@@ -873,8 +874,7 @@ object CatalogSci {
     // re-ran the corpus aggregate + the global windows (the C10
     // missing-loop-invariant pattern, guide §2.4). All of these frames are
     // level-domain-sized (bounded), so the persisted blocks are tiny.
-    val cutL = graft.dedup.Dedup.lineageCutLazy _
-    val pre0 = cutL(pre.select(col("i"), col("l"), col("cw"), col("cwv"),
+    val pre0 = IterativeLoop.cutLazy(pre.select(col("i"), col("l"), col("cw"), col("cwv"),
         col("cwv2"))
       .unionByName(s.range(1).select(lit(0L).as("i"), lit(-1L).as("l"),
         lit(0L).as("cw"), lit(0L).as("cwv"), lit(0L).as("cwv2"))))
@@ -889,7 +889,7 @@ object CatalogSci {
           ((col("cvk") - col("cvj")).cast("double") *
             (col("cvk") - col("cvj")).cast("double") /
             (col("cwk") - col("cwj")).cast("double"))).as("sse"))
-    val ivC = cutL(iv)
+    val ivC = IterativeLoop.cutLazy(iv)
     val dp1 = ivC.filter(col("j") === 0)
       .select(col("k").as("i"), col("sse").as("cost"), lit(0L).as("arg"))
     def dpNext(prev: DataFrame): DataFrame = {
@@ -902,8 +902,9 @@ object CatalogSci {
         .select(col("i"), col("cost"), col("j").as("arg"))
     }
     // each dp level is read twice (next level + backtrack) — cut them too
-    val dp2 = cutL(dpNext(cutL(dp1))); val dp3 = cutL(dpNext(dp2))
-    val dp4 = cutL(dpNext(dp3))
+    val dp2 = IterativeLoop.cutLazy(dpNext(IterativeLoop.cutLazy(dp1)))
+    val dp3 = IterativeLoop.cutLazy(dpNext(dp2))
+    val dp4 = IterativeLoop.cutLazy(dpNext(dp3))
     // read the last index from the CUT pre0 (its extra i=0 sentinel row
     // never wins a max), so this aggregate doesn't re-run the corpus pass
     val last = pre0.agg(max(col("i")).as("bL"))
@@ -977,7 +978,7 @@ object CatalogSci {
             col("sw").cast("double"))
         .select(col("slope"), col("intercept"), col("n_down"))
     }
-    val r4 = graft.ops.IterativeLoop.fixedEager(
+    val r4 = IterativeLoop.fixedEager(
       ols.withColumn("n_down", lit(0L)), 4)(
       (f, _) => iterate(f.select(col("slope"), col("intercept"))))
     r4.select(col("slope"), col("intercept"), col("n_down"))

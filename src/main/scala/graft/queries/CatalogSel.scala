@@ -48,9 +48,9 @@ object CatalogSel {
     trussOf(edges, minSup = 1, rounds = 4)
   }
 
-  /** Truss peel on an explicit (x, y) x<y edge frame (also ScaleProbe's
-    * entry): keep edges whose support ≥ minSup, `rounds` synchronous
-    * rounds. */
+  /** Truss peel on an explicit (x, y) x<y edge frame (also the entry the
+    * in-memory ScaleProbe timed; code at feb0fc4): keep edges whose
+    * support ≥ minSup, `rounds` synchronous rounds. */
   private[graft] def trussOf(edges0: DataFrame, minSup: Int, rounds: Int): DataFrame = {
     val e0 = IterativeLoop.cutLazy(edges0)
     // Round 16 (r15 VERDICT #6): exact early exit on the monotone peel —

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.ops.IterativeLoop
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,7 +44,6 @@ object Pca {
       quantBits: Int): (DataFrame, DataFrame) = {
     require(iterations >= 1, s"need at least one iteration, got $iterations")
     val scale = 1L << quantBits
-    val lazyCut = (d: DataFrame) => graft.dedup.Dedup.lineageCutLazy(d)
 
     // 1-2: quantize + per-dim integer means + centered values, exploded
     val quant = df.select(
@@ -55,7 +55,7 @@ object Pca {
     val meanArr = means
       .agg(array_sort(collect_list(struct(col("j"), col("m")))).as("jm"))
       .select(transform(col("jm"), e => e.getField("m")).as("marr"))
-    val centered = lazyCut(quant.crossJoin(broadcast(graft.ops.Guards.scalar(meanArr)))
+    val centered = IterativeLoop.cutLazy(quant.crossJoin(broadcast(graft.ops.Guards.scalar(meanArr)))
       .select(zip_with(col("q"), col("marr"), (q, m) => q - m).as("c")))
 
     // 3: exact-integer scatter, then k-ordered rows of doubles
@@ -64,7 +64,7 @@ object Pca {
       .select(col("j"), col("cj"), posexplode(col("c")).as(Seq("k", "ck")))
       .groupBy(col("j"), col("k"))
       .agg(sum(col("cj") * col("ck")).as("s"))
-    val sRows = lazyCut(sEntries
+    val sRows = IterativeLoop.cutLazy(sEntries
       .groupBy(col("j"))
       .agg(array_sort(collect_list(struct(col("k"), col("s")))).as("ks"))
       .select(col("j"), transform(col("ks"), e => e.getField("s").cast("double")).as("srow")))
@@ -82,7 +82,7 @@ object Pca {
           x => x / sqrt(dot(col("warr"), col("warr")))).as("v"),
         sqrt(dot(col("warr"), col("warr"))).as("norm"))
       graft.ops.PlanProbe.offer(lid, r, next)
-      v = lazyCut(next)
+      v = IterativeLoop.cutLazy(next)
     }
     (meanArr, v)
   }

@@ -227,7 +227,7 @@ object Similarity {
       // per-round lineage cut shared with connectedComponents: reliable
       // checkpoint when a checkpoint dir is set (fault-tolerant training),
       // else eager localCheckpoint
-      cents = graft.dedup.Dedup.lineageCut(assigned
+      cents = graft.ops.IterativeLoop.cut(assigned
         .select(col("cid"), posexplode(col("x_v")).as(Seq("pos", "v")))
         .groupBy(col("cid"), col("pos"))
         .agg(
@@ -607,7 +607,7 @@ object Similarity {
         .orderBy(col("d2").desc, col("vec_id").asc).limit(1)
         .select(lit(t.toLong).as("round"), col("vec_id"), col("v"), col("d2"))
       graft.ops.PlanProbe.offer(lid, t, winner)
-      centers = graft.dedup.Dedup.lineageCutLazy(centers.union(winner))
+      centers = graft.ops.IterativeLoop.cutLazy(centers.union(winner))
     }
     centers.select(col("round"), col("vec_id"), col("d2"))
   }
@@ -637,7 +637,7 @@ object Similarity {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
     val c = candidates.select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val rel = graft.dedup.Dedup.lineageCutLazy(
+    val rel = graft.ops.IterativeLoop.cutLazy(
       c.join(broadcast(q), col("q_id") =!= col("c_id"))
         .select(col("q_id"), col("c_id"), col("c_v"),
           GraftFunctions.cosine(col("q_v"), col("c_v")).as("rel")))
@@ -663,7 +663,7 @@ object Similarity {
         .select(col("q_id"), lit(t.toLong).as("round"),
           (-col("w.nid")).as("c_id"), col("w.v").as("c_v"), col("w.m").as("mmr"))
       graft.ops.PlanProbe.offer(lid, t, winner)
-      selected = graft.dedup.Dedup.lineageCutLazy(selected.union(winner))
+      selected = graft.ops.IterativeLoop.cutLazy(selected.union(winner))
     }
     selected.select(col("q_id"), col("round"), col("c_id"), col("mmr"))
   }

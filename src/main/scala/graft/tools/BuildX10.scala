@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 /**
  * Builds the ×K disjoint-replica testdata directory used for the
  * at-scale correctness gate (round-10 item: hash-match proof above
- * sf0.1, not just timing probes). Replication follows the ScaleProbe
- * discipline: every copy gets a disjoint key range (+i·10⁷ on all id /
+ * sf0.1, not just timing probes). Replication follows SCALE.md's
+ * discipline (first used by the in-memory ScaleProbe, code at feb0fc4):
+ * every copy gets a disjoint key range (+i·10⁷ on all id /
  * FK columns, consistently, so intra-copy joins are isomorphic to the
  * base corpus), and document TOKENS are suffixed per copy (copy 0
  * untouched) so near-dup families never fuse across copies — pair and

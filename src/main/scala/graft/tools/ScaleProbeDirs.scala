@@ -6,9 +6,11 @@ package graft.tools
  * disjoint-replica dirs built by [[BuildX10]], and reports the wall-time
  * exponent α = ln(t₁₀/t₄)/ln(10/4) (×1 is stage-overhead-dominated, so
  * the exponent is taken from the two largest scales, same convention as
- * [[ScaleProbe.heavies]]). Dir-based (vs ScaleProbe's in-memory
- * replication) so dir-keyed machinery — the FrameMemo'd suffix index,
- * Tables scans, partition pruning — is measured exactly as deployed.
+ * SCALE.md's heavies table). Dir-based (vs the in-memory replication of
+ * the removed ScaleProbe, code at feb0fc4) so dir-keyed machinery — the
+ * FrameMemo'd suffix index, Tables scans, partition pruning — is measured
+ * exactly as deployed. Each query runs through [[graft.Bench.materialize]],
+ * as Bench times it: every row and column produced.
  *
  * Usage: runMain graft.tools.ScaleProbeDirs q406_lcp_repeats,q411_...
  *   [x4dir] [x10dir]   (defaults /tmp/testdata_x4 /tmp/testdata_x10)
@@ -31,9 +33,9 @@ object ScaleProbeDirs {
       val fn = qs.getOrElse(name, sys.error(s"unknown query $name"))
       val ts = dirs.map { case (k, d) =>
         val t0 = System.nanoTime()
-        val n = fn(spark, d).count()
+        graft.Bench.materialize(fn(spark, d))
         val t = (System.nanoTime() - t0) / 1e9
-        println(f"[dscale] $name%-24s x$k%-3d $t%7.1f s rows=$n")
+        println(f"[dscale] $name%-24s x$k%-3d $t%7.1f s")
         // release this leg's blocks before the next: the probe runs the
         // memo-backed index queries at three scales in ONE JVM, and the
         // x10 legs cannot afford to share the heap with the x1/x4
